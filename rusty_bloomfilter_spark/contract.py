@@ -3081,7 +3081,6 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncheckpointed build (asserted in-query; merge algebra makes the
     split invisible). Emits the lineage metrics a production job logs.
     Rows-only: the payload-equality assert is the real gate."""
-    from .operators.aggregate import partition_sketches
     from .operators.checkpoint import build_with_checkpoint
     from .operators.sketches import BlockedBloomSketch
     from .sketch import merge_sketch_payloads
@@ -3093,12 +3092,7 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = BlockedBloomSketch.for_np(n=500_000, p=1e-4)
 
     # direct build (no checkpoint) — the bitwise oracle
-    direct = partition_sketches(
-        spark.read.parquet(src), sk._empty, sk._update, columns=["tokens"]
-    )
-    from .operators.aggregate import tree_merge
-
-    drow = tree_merge(direct, merge_sketch_payloads, fanout=8).collect()[0]
+    d_payload, d_items = sk.build_bytes(spark.read.parquet(src), fanout=8)
 
     # simulated crash: checkpoint only half the input files
     files = sorted(spark.read.parquet(src).inputFiles())
@@ -3114,8 +3108,8 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src, ckpt, sk._empty, sk._update, merge_sketch_payloads,
         columns=["tokens"], fanout=8,
     )
-    assert report.payload == bytes(drow["payload"]), "resume != direct build"
-    assert report.n_items == int(drow["n_items"])
+    assert report.payload == d_payload, "resume != direct build"
+    assert report.n_items == d_items
     assert 0 < report.resumed_files < report.total_files  # genuine resume
     assert report.built_files == report.total_files - report.resumed_files
     m = report.metrics()

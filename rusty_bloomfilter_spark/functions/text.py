@@ -146,18 +146,8 @@ def duckdb_lang_id(text_expr: str) -> str:
 BPE_ISH_PATTERN = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
 
 
-def bpe_pretokenize(text: Column) -> Column:
-    """text -> array<string> of BPE-ish pretokens (letters / digits /
-    punctuation runs with leading-space attachment, GPT-2 style)."""
-    return F.expr(f"regexp_extract_all(text, '{BPE_ISH_PATTERN}', 0)").alias("pretokens")
-
-
 def bpe_pretokenize_expr(col_name: str) -> Column:
     return F.regexp_extract_all(F.col(col_name), F.lit(BPE_ISH_PATTERN), F.lit(0))
-
-
-def duckdb_bpe_pretokenize(text_expr: str) -> str:
-    return f"regexp_extract_all({text_expr}, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')"
 
 
 def rolling_fingerprint_expr(tokens: Column, n: int = 3, vocab: int = 50257) -> Column:
@@ -199,13 +189,6 @@ def adjacent_pair_keys(tokens: Column, vocab: int = 50261) -> Column:
     )
     return F.when(F.size(tokens) >= 2, pairs).otherwise(
         F.array().cast("array<bigint>")
-    )
-
-
-def duckdb_adjacent_pair_keys(tokens_expr: str, vocab: int = 50261) -> str:
-    return (
-        f"list_transform(range(len({tokens_expr}) - 1), "
-        f"i -> CAST({tokens_expr}[i+1] AS BIGINT) * {vocab} + {tokens_expr}[i+2])"
     )
 
 

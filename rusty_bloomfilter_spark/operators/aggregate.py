@@ -1,39 +1,35 @@
-"""Distributed sketch aggregation: the tree-merge topology.
+"""Distributed sketch aggregation: one fold, one merge level, one tree.
 
 PySpark has no vectorized custom-Aggregator API, so the idiomatic (and
-north-rule-mandated explicit) substitute is:
+north-rule-mandated explicit) substitute is three pieces, all on Arrow,
+that every build, checkpoint, shard and compaction path goes through:
 
-    stage 1  mapInPandas      one sketch row per *input partition*
-                              (map-side combine: row data never
-                              shuffles — only O(sketch_bytes) rows do)
-    stage 2  repartition(fanout) + mapInPandas     partial OR-merge
-    stage 3  repartition(1)   + mapInPandas        final merge
+    fold_sketches  stage 1, mapInArrow: one sketch row per input
+                   partition (per (partition, key) when keyed) — row
+                   data never shuffles, only O(sketch_bytes) rows do
+    merge_level    one OR-merge of sketch rows: mapInArrow (global) or
+                   groupBy(key).applyInArrow (keyed)
+    merge_tree     the topology: ceil(P/fanout)-task levels for a global
+                   build (``RDD.treeAggregate`` in DataFrame form), one
+                   groupBy(key) level (+ an optional salted one) keyed
 
-This is exactly ``RDD.treeAggregate(depth=2)`` expressed in DataFrame
-form (semantics pinned by the reference's merge matrices,
-/root/reference/src/bloomfilter/mod.rs:621-761: merges are associative
-and commutative, so any tree shape yields the same bytes).
-
-Scale notes (1000-executor / 100 TB framing):
-- Stage 1 scans row data once, in place — zero row shuffle. The only
-  shuffled bytes are P sketch payloads (P = input partitions), each
-  O(m/8). At P=100k partitions and a 16 MB filter that is ~1.6 TB of
-  payloads in the worst case — which is why fanout is a tree, not a
-  single reducer: each stage-2 task merges P/fanout payloads, and the
-  final task merges only `fanout` of them.
-- Keyed builds (``build_by_key``) shuffle one sketch row per
-  (partition, key): the classic partial-agg pattern. A skewed key
-  (hot `source`) therefore costs nothing extra at stage 1 — its rows
-  are already spread across partitions — and its merge fan-in is
-  bounded by the partition count, optionally salted down further.
+Merges are associative and commutative (the reference implementation's
+merge matrices, src/bloomfilter/mod.rs:621-761), so any tree shape
+yields the same bytes. At 100 TB the shuffled bytes are P payloads of
+O(m/8) each — ~1.6 TB at P=100k and a 16 MB filter in the worst case —
+which is why the global merge is a tree with per-task fan-in bounded
+by ``fanout``, not a single reducer. A skewed key (hot `source`) costs
+nothing extra at stage 1 — its rows are already spread across
+partitions — and its merge fan-in is bounded by the partition count,
+optionally salted down further.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from dataclasses import dataclass
 from typing import Any
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,42 +44,22 @@ KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
 UpdateFn = Callable[[Any, pa.RecordBatch], None]
 MergePayloadsFn = Callable[[list[bytes]], bytes]
 
-# merge stages fold their payload buffer down to one whenever it grows
+# A multi-sketch spec: (name, make_empty, update, merge_payloads).
+MultiSpec = tuple[str, Callable[[], Any], UpdateFn, MergePayloadsFn]
+
+# merge levels fold their payload buffer down to one whenever it grows
 # past this many live payloads — bounds task memory at FLUSH_AT
 # payloads regardless of fan-in (merges are associative, so folding
 # early yields the same canonical bytes)
 _FLUSH_AT = 64
 
-
-def keyed_payload_merge(
-    key_col: str,
-    *,
-    merge_fn: MergePayloadsFn,
-    sum_cols: tuple[str, ...] = ("n_items",),
-    key_out: Callable[[Any], Any] | None = None,
-):
-    """THE single-payload keyed group-merge for applyInPandas: one row
-    out per key — payload = merge_fn(group payloads), every counter in
-    ``sum_cols`` summed. Shared by build_by_key, the sharded build /
-    cross-snapshot union (sharded.merge_shard_group) and the file-index
-    compaction (pruning.compact_index) so payload handling cannot
-    diverge across them. ``key_out`` coerces the group key for the
-    output schema (int for shard ids, str for file names)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        out: dict[str, list] = {
-            key_col: [key if key_out is None else key_out(key)],
-            "payload": [merge_fn([bytes(p) for p in pdf["payload"]])],
-        }
-        for c in sum_cols:
-            out[c] = [int(pdf[c].sum())]
-        return pd.DataFrame(out)
-
-    return merge
+# a one-sketch build folds one spec named _ONE, then projects its
+# fold rows to (payload, n_items)
+_ONE = "sketch"
+_AS_SKETCH_ROWS = (f"payload_{_ONE} AS payload", f"n_{_ONE} AS n_items")
 
 
-def safe_partition_count(df: DataFrame, default: int) -> int:
+def safe_partition_count(df: DataFrame, default: int | None = None) -> int:
     """Partition count of ``df`` WITHOUT the AQE materialization trap.
 
     ``df.rdd.getNumPartitions()`` on a post-shuffle plan eagerly
@@ -91,9 +67,15 @@ def safe_partition_count(df: DataFrame, default: int) -> int:
     (whole Spark jobs before the caller ever runs an action — round-3
     ADVICE + round-4 review, both measured). Touch ``.rdd`` only when
     the physical plan contains no Exchange; otherwise return
-    ``default`` (callers pass the shuffle-partition conf — the
+    ``default``, by default the shuffle-partition conf — the
     pre-AQE-coalesce upper bound, so the tree conservatively keeps its
-    merge level)."""
+    merge level. Builds measure their INPUT (pre-mapInArrow), which may
+    itself be post-shuffle (a join output, as in plans/curate.py)."""
+    if default is None:
+        try:
+            default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        except Exception:
+            default = 200
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
     except Exception:  # plan stringification is best-effort only
@@ -101,130 +83,6 @@ def safe_partition_count(df: DataFrame, default: int) -> int:
     if "Exchange" in plan:
         return default
     return df.rdd.getNumPartitions()
-
-
-def _shuffle_conf(df: DataFrame, fallback: int = 200) -> int:
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return fallback
-
-
-def partition_sketches(
-    df: DataFrame,
-    make_empty: Callable[[], Any],
-    update: UpdateFn,
-    *,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Stage 1: fold every Arrow batch of each partition into one local
-    sketch; emit one (payload, n_items) row per partition. Column-prunes
-    before the UDF so the parquet scan reads only what the sketch needs.
-    """
-    if columns:
-        df = df.select(*columns)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = make_empty()
-        for batch in batches:
-            update(acc, batch)
-        yield pa.RecordBatch.from_pydict(
-            {"payload": [acc.to_bytes()], "n_items": [acc.n_items]}
-        )
-
-    return df.mapInArrow(build, schema=SKETCH_SCHEMA)
-
-
-def tree_merge(
-    sketch_df: DataFrame,
-    merge_payloads: MergePayloadsFn,
-    *,
-    fanout: int = 16,
-    empty_payload: bytes | None = None,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Stages 2+3: depth-2 tree reduction over sketch rows. Returns a
-    single-row DataFrame (payload, n_items). ``empty_payload`` (the
-    sketch identity) is emitted when the input has no rows at all."""
-
-    def _fold(batches: Iterator[pd.DataFrame]) -> tuple[list[bytes], int]:
-        # stream-fold: never hold more than _FLUSH_AT payloads live —
-        # a stage task at P=100k partitions would otherwise buffer its
-        # whole fan-in (GBs of payloads) before the first merge call
-        payloads: list[bytes] = []
-        n_items = 0
-        for pdf in batches:
-            payloads.extend(bytes(p) for p in pdf["payload"])
-            n_items += int(pdf["n_items"].sum())
-            if len(payloads) >= _FLUSH_AT:
-                payloads = [merge_payloads(payloads)]
-        return payloads, n_items
-
-    def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payloads, n_items = _fold(batches)
-        if payloads:
-            yield pd.DataFrame({"payload": [merge_payloads(payloads)], "n_items": [n_items]})
-
-    def merge_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payloads, n_items = _fold(batches)
-        if not payloads and empty_payload is not None:
-            yield pd.DataFrame({"payload": [empty_payload], "n_items": [0]})
-        elif payloads:
-            yield pd.DataFrame({"payload": [merge_payloads(payloads)], "n_items": [n_items]})
-
-    # Intermediate levels only help when they REDUCE fan-in: with
-    # P <= fanout partial rows they're pure extra shuffle + python
-    # round-trip over the same rows (measured ~2.7s of overhead on 8x
-    # 5 MB payloads) — go straight to the final merge then. Above that,
-    # repartition(ceil(P/fanout)) per level keeps EVERY task's expected
-    # fan-in at ~fanout (a fixed repartition(fanout) would give stage-2
-    # tasks P/fanout payloads each — unbounded in P), looping levels
-    # until one task can finish the job: depth grows as log_fanout(P).
-    # Callers that know the upstream partition count pass n_parts;
-    # otherwise it is derived WITHOUT touching .rdd on a shuffled plan
-    # (safe_partition_count — the AQE eager-materialization trap).
-    if n_parts is None:
-        n_parts = safe_partition_count(sketch_df, default=_shuffle_conf(sketch_df))
-    level = sketch_df
-    while n_parts > fanout:
-        n_tasks = -(-n_parts // fanout)  # ceil
-        level = level.repartition(n_tasks).mapInPandas(
-            merge_partition, schema=SKETCH_SCHEMA
-        )
-        n_parts = n_tasks
-    return level.repartition(1).mapInPandas(merge_final, schema=SKETCH_SCHEMA)
-
-
-def build_sketch(
-    df: DataFrame,
-    make_empty: Callable[[], Any],
-    update: UpdateFn,
-    merge_payloads: MergePayloadsFn,
-    *,
-    columns: list[str] | None = None,
-    fanout: int = 16,
-) -> DataFrame:
-    """Full pipeline: partition build -> tree merge -> single sketch row."""
-    # partition count measured on the INPUT (pre-mapInArrow) via the
-    # Exchange-probing helper: the input itself may be post-shuffle (a
-    # join output, as in plans/curate.py), where .rdd would eagerly run
-    # the upstream pipeline at plan-construction time
-    n_parts = safe_partition_count(df, default=_shuffle_conf(df))
-    return tree_merge(
-        partition_sketches(df, make_empty, update, columns=columns),
-        merge_payloads,
-        fanout=fanout,
-        empty_payload=make_empty().to_bytes(),
-        n_parts=n_parts,
-    )
-
-
-def collect_sketch_bytes(sketch_df: DataFrame) -> tuple[bytes, int]:
-    """Driver-side: pull the single merged (payload, n_items) row."""
-    rows = sketch_df.collect()
-    if not rows:
-        raise ValueError("sketch pipeline produced no rows (empty input?)")
-    return bytes(rows[0]["payload"]), int(rows[0]["n_items"])
 
 
 def iter_key_slices(batch: pa.RecordBatch, key_col: str):
@@ -267,6 +125,248 @@ def iter_key_slices(batch: pa.RecordBatch, key_col: str):
         yield key, sorted_batch.slice(offsets[i], offsets[i + 1] - offsets[i])
 
 
+# ---------------------------------------------------------------------------
+# The row layout, stage 1 (the fold), stage 2+ (the merge level + topology)
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class SketchRows:
+    """Column layout of a sketch-row frame (DDL ``schema``): payload
+    columns with their merge fn and identity (a ``() -> bytes`` for the
+    empty sketch, or None), counter columns that sum, and key columns
+    passed through. Merged rows keep the schema."""
+
+    schema: str
+    payloads: tuple[tuple[str, MergePayloadsFn, Callable[[], bytes] | None], ...]
+    sums: tuple[str, ...] = ("n_items",)
+    keys: tuple[str, ...] = ()
+
+
+def _identity(make_empty: Callable[[], Any]) -> Callable[[], bytes]:
+    return lambda: make_empty().to_bytes()
+
+
+def _multi_rows(specs: list[MultiSpec], *, keyed: bool = False) -> SketchRows:
+    """(key?, n_rows, payload_<name>, n_<name>, ...) — the fold's rows."""
+    cols = ", ".join(f"payload_{name} binary, n_{name} bigint" for name, *_ in specs)
+    return SketchRows(
+        ("key string, " if keyed else "") + "n_rows bigint, " + cols,
+        tuple((f"payload_{name}", mrg, _identity(mk)) for name, mk, _upd, mrg in specs),
+        ("n_rows", *(f"n_{name}" for name, *_ in specs)),
+        ("key",) if keyed else (),
+    )
+
+
+def fold_sketches(
+    df: DataFrame,
+    specs: list[MultiSpec],
+    *,
+    key_col: str | None = None,
+    columns: list[str] | None = None,
+) -> DataFrame:
+    """THE stage-1 fold: each partition's Arrow batches go into N spec
+    accumulators per key in one pass -> ``_multi_rows`` rows.
+
+    ``key_col=None`` is one group: batches are folded whole (no slicing
+    or sorting) and every partition emits exactly one row. With a key,
+    batches are split by ``iter_key_slices`` and a partition emits one
+    row per key present (keys stringified). ``columns`` column-prunes
+    before the UDF so the scan reads only what the specs need.
+    """
+    cols = columns or df.columns
+    if key_col is not None and key_col not in cols:
+        cols = [key_col, *cols]
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        accs: dict[Any, list] = {}  # key -> [n_rows, acc_per_spec...]
+        if key_col is None:
+            accs[None] = [0, *(mk() for _, mk, _, _ in specs)]
+        for batch in batches:
+            parts = ((None, batch),) if key_col is None else iter_key_slices(batch, key_col)
+            for key, sub in parts:
+                ent = accs.get(key)
+                if ent is None:
+                    ent = accs[key] = [0, *(mk() for _, mk, _, _ in specs)]
+                ent[0] += sub.num_rows
+                for acc, (_, _, upd, _) in zip(ent[1:], specs):
+                    upd(acc, sub)
+        if not accs:
+            return
+        out: dict[str, list] = {}
+        if key_col is not None:
+            out["key"] = [None if k is None else str(k) for k in accs]
+        out["n_rows"] = [ent[0] for ent in accs.values()]
+        for i, (name, *_rest) in enumerate(specs, start=1):
+            out[f"payload_{name}"] = [ent[i].to_bytes() for ent in accs.values()]
+            out[f"n_{name}"] = [ent[i].n_items for ent in accs.values()]
+        yield pa.RecordBatch.from_pydict(out)
+
+    schema = _multi_rows(specs, keyed=key_col is not None).schema
+    return df.select(*cols).mapInArrow(fold, schema=schema)
+
+
+def _merge_rows(
+    rows: SketchRows, batches: Iterable[pa.RecordBatch], final: bool
+) -> pa.RecordBatch | None:
+    """Stream-fold sketch rows into one: payloads merged per column,
+    counters summed, keys from the first row. A column's buffer folds
+    to one payload once it holds _FLUSH_AT — a task at P=100k
+    partitions would otherwise buffer its whole fan-in (GBs of
+    payloads) before the first merge call. No rows in: nothing out, or
+    the identity row on the ``final`` level of a global build."""
+    import pyarrow.compute as pc
+
+    firsts: dict[str, pa.Array] | None = None
+    bufs: dict[str, list[bytes]] = {col: [] for col, _, _ in rows.payloads}
+    sums = dict.fromkeys(rows.sums, 0)
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if firsts is None:
+            firsts = {k: batch.column(k).slice(0, 1) for k in rows.keys}
+        for c in rows.sums:
+            sums[c] += pc.sum(batch.column(c)).as_py() or 0
+        for col, merge, _ in rows.payloads:
+            bufs[col].extend(batch.column(col).to_pylist())
+            if len(bufs[col]) >= _FLUSH_AT:
+                bufs[col] = [merge(bufs[col])]
+    if firsts is None:
+        if not final or any(empty is None for _, _, empty in rows.payloads):
+            return None
+        firsts = {}
+        payloads = {col: empty() for col, _, empty in rows.payloads}
+    else:
+        # a lone payload is merged too: merging re-canonicalizes it
+        payloads = {col: merge(bufs[col]) for col, merge, _ in rows.payloads}
+    out = dict(firsts)
+    out.update((c, pa.array([v], type=pa.binary())) for c, v in payloads.items())
+    out.update((c, pa.array([v], type=pa.int64())) for c, v in sums.items())
+    names = [field.split()[0] for field in rows.schema.split(",")]
+    return pa.RecordBatch.from_arrays([out[n] for n in names], names=names)
+
+
+def merge_level(
+    frame: DataFrame, rows: SketchRows, *, by: list[str] | None = None, final: bool = False
+) -> DataFrame:
+    """THE merge level: one merged row per partition (``by=None``:
+    mapInArrow) or per group (groupBy(*by).applyInArrow, streamed as
+    record batches). Grouping columns outside the layout, such as
+    ``_salt``, are dropped."""
+
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        out = _merge_rows(rows, batches, final)
+        if out is not None:
+            yield out
+
+    if by is None:
+        return frame.mapInArrow(merge, schema=rows.schema)
+    return frame.groupBy(*by).applyInArrow(merge, schema=rows.schema)
+
+
+def merge_tree(
+    partial: DataFrame,
+    rows: SketchRows,
+    *,
+    fanout: int = 16,
+    n_parts: int | None = None,
+    salt: int = 0,
+) -> DataFrame:
+    """THE merge topology over stage-1 sketch rows.
+
+    Keyed (``rows.keys``): one groupBy(key) merge level; ``salt > 0``
+    adds an intermediate groupBy(key, _salt) level first, bounding any
+    single task's fan-in to partitions/salt — use when the partition
+    count is huge (the north rule's explicit skew handling).
+
+    Global -> one row: intermediate levels only help when they REDUCE
+    fan-in: with P <= fanout partial rows they're pure extra shuffle +
+    python round-trip over the same rows (measured ~2.7s of overhead on
+    8x 5 MB payloads) — go straight to the final merge then. Above
+    that, repartition(ceil(P/fanout)) per level keeps EVERY task's
+    expected fan-in at ~fanout (a fixed repartition(fanout) would give
+    stage-2 tasks P/fanout payloads each — unbounded in P), looping
+    levels until one task can finish the job: depth grows as
+    log_fanout(P). Callers that know the upstream partition count pass
+    ``n_parts``; otherwise it is derived WITHOUT touching .rdd on a
+    shuffled plan (safe_partition_count — the AQE eager-materialization
+    trap).
+    """
+    if rows.keys:
+        if salt > 0:
+            salted = partial.withColumn(
+                "_salt", F.pmod(F.xxhash64(F.col(rows.payloads[0][0])), F.lit(salt))
+            )
+            partial = merge_level(salted, rows, by=[*rows.keys, "_salt"])
+        return merge_level(partial, rows, by=list(rows.keys))
+    if n_parts is None:
+        n_parts = safe_partition_count(partial)
+    level = partial
+    while n_parts > fanout:
+        n_tasks = -(-n_parts // fanout)  # ceil
+        level = merge_level(level.repartition(n_tasks), rows)
+        n_parts = n_tasks
+    return merge_level(level.repartition(1), rows, final=True)
+
+
+# ---------------------------------------------------------------------------
+# Build entry points
+# ---------------------------------------------------------------------------
+
+
+def partition_sketches(
+    df: DataFrame,
+    make_empty: Callable[[], Any],
+    update: UpdateFn,
+    *,
+    columns: list[str] | None = None,
+) -> DataFrame:
+    """Stage 1 of a one-sketch build: one (payload, n_items) row per
+    partition."""
+    spec = [(_ONE, make_empty, update, None)]
+    return fold_sketches(df, spec, columns=columns).selectExpr(*_AS_SKETCH_ROWS)
+
+
+def tree_merge(
+    sketch_df: DataFrame,
+    merge_payloads: MergePayloadsFn,
+    *,
+    fanout: int = 16,
+    empty_payload: bytes | None = None,
+    n_parts: int | None = None,
+) -> DataFrame:
+    """Global merge of (payload, n_items) rows -> a single-row
+    DataFrame (payload, n_items). ``empty_payload`` (the sketch
+    identity) is emitted when the input has no rows at all."""
+    identity = None if empty_payload is None else lambda: empty_payload
+    rows = SketchRows(SKETCH_SCHEMA, (("payload", merge_payloads, identity),))
+    return merge_tree(sketch_df, rows, fanout=fanout, n_parts=n_parts)
+
+
+def build_sketch(
+    df: DataFrame,
+    make_empty: Callable[[], Any],
+    update: UpdateFn,
+    merge_payloads: MergePayloadsFn,
+    *,
+    columns: list[str] | None = None,
+    fanout: int = 16,
+) -> DataFrame:
+    """One global sketch: fold -> tree merge -> single
+    (payload, n_items) row."""
+    rows = SketchRows(SKETCH_SCHEMA, (("payload", merge_payloads, _identity(make_empty)),))
+    partial = partition_sketches(df, make_empty, update, columns=columns)
+    return merge_tree(partial, rows, fanout=fanout, n_parts=safe_partition_count(df))
+
+
+def collect_sketch_bytes(sketch_df: DataFrame) -> tuple[bytes, int]:
+    """Driver-side: pull the single merged (payload, n_items) row."""
+    rows = sketch_df.collect()
+    if not rows:
+        raise ValueError("sketch pipeline produced no rows (empty input?)")
+    return bytes(rows[0]["payload"]), int(rows[0]["n_items"])
+
+
 def build_by_key(
     df: DataFrame,
     key_col: str,
@@ -277,59 +377,14 @@ def build_by_key(
     columns: list[str] | None = None,
     salt: int = 0,
 ) -> DataFrame:
-    """Per-key sketches with map-side combine.
-
-    Stage 1 (mapInPandas) folds each partition's rows into one sketch
-    *per key present in the partition* — the hot key's row data never
-    concentrates. Stage 2 groupBy(key) merges the tiny sketch rows.
-    ``salt > 0`` adds an intermediate merge level: groupBy(key, salt)
-    first, bounding any single task's fan-in to partitions/salt — use
-    when the partition count is huge (the north rule's explicit skew
-    handling).
-    """
-    cols = columns or df.columns
-    if key_col not in cols:
-        cols = [key_col, *cols]
-    df = df.select(*cols)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs: dict[str, Any] = {}
-        for batch in batches:
-            for key, sub in iter_key_slices(batch, key_col):
-                acc = accs.get(key)
-                if acc is None:
-                    acc = accs[key] = make_empty()
-                update(acc, sub)
-        if accs:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "key": [None if k is None else str(k) for k in accs],
-                    "payload": [a.to_bytes() for a in accs.values()],
-                    "n_items": [a.n_items for a in accs.values()],
-                }
-            )
-
-    partial = df.mapInArrow(build, schema=KEYED_SKETCH_SCHEMA)
-
-    merge_group = keyed_payload_merge("key", merge_fn=merge_payloads)
-
-    if salt > 0:
-        # merge_group ignores the extra _salt column, so it serves both
-        # levels directly (no wrapper indirection)
-        salted = partial.withColumn("_salt", F.pmod(F.xxhash64(F.col("payload")), F.lit(salt)))
-        level1 = salted.groupBy("key", "_salt").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
-        return level1.groupBy("key").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
-    return partial.groupBy("key").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
-
-
-# A multi-sketch spec: (name, make_empty, update, merge_payloads).
-MultiSpec = tuple[str, Callable[[], Any], UpdateFn, MergePayloadsFn]
-
-
-def _multi_schema(specs: list[MultiSpec]) -> str:
-    return "n_rows bigint, " + ", ".join(
-        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
-    )
+    """Per-key sketches with map-side combine -> (key, payload,
+    n_items), one row per key. Stage 1 folds each partition's rows into
+    one sketch *per key present in the partition* — the hot key's row
+    data never concentrates; ``salt`` as in ``merge_tree``."""
+    rows = SketchRows(KEYED_SKETCH_SCHEMA, (("payload", merge_payloads, None),), keys=("key",))
+    spec = [(_ONE, make_empty, update, None)]
+    partial = fold_sketches(df, spec, key_col=key_col, columns=columns)
+    return merge_tree(partial.selectExpr("key", *_AS_SKETCH_ROWS), rows, salt=salt)
 
 
 def build_multi(
@@ -341,80 +396,17 @@ def build_multi(
 ) -> DataFrame:
     """N GLOBAL sketches in one scan of the input, tree-merged.
 
-    The unkeyed sibling of ``build_multi_by_key``: every Arrow batch is
-    folded into all N accumulators in a single pass — N separate builds
-    would scan the same corpus N times, and at 100 TB the scan I/O
-    dominates, so fusing is an N x win on the dominant cost. The
-    shuffle carries one row per partition holding all N payloads side
-    by side; stages 2+3 tree-merge with fan-in bounded by ``fanout``,
-    exactly like ``build_sketch``.
-
-    ``columns`` must cover every spec's input column (e.g.
-    ["tokens", "n_tok"] for token sketches + a length quantile sketch).
+    Every Arrow batch is folded into all N accumulators in a single
+    pass — N separate builds would scan the same corpus N times, and at
+    100 TB the scan I/O dominates, so fusing is an N x win on the
+    dominant cost. ``columns`` must cover every spec's input column
+    (e.g. ["tokens", "n_tok"] for token sketches + a length quantile
+    sketch).
 
     -> single row (n_rows, payload_<name> binary, n_<name> bigint, ...).
     """
-    df = df.select(*columns)
-    schema = _multi_schema(specs)
-    # measured on the input before mapInArrow, shuffle-safely (see
-    # tree_merge note)
-    n_parts = safe_partition_count(df, default=_shuffle_conf(df))
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs = [mk() for _, mk, _, _ in specs]
-        n_rows = 0
-        for batch in batches:
-            n_rows += batch.num_rows
-            for acc, (_, _, upd, _) in zip(accs, specs):
-                upd(acc, batch)
-        out: dict[str, list] = {"n_rows": [n_rows]}
-        for acc, (name, *_rest) in zip(accs, specs):
-            out[f"payload_{name}"] = [acc.to_bytes()]
-            out[f"n_{name}"] = [acc.n_items]
-        yield pa.RecordBatch.from_pydict(out)
-
-    partial = df.mapInArrow(build, schema=schema)
-
-    def merge_rows(batches: Iterator[pd.DataFrame], *, emit_empty: bool):
-        payloads: dict[str, list[bytes]] = {name: [] for name, *_ in specs}
-        n_items: dict[str, int] = {name: 0 for name, *_ in specs}
-        n_rows = 0
-        for pdf in batches:
-            n_rows += int(pdf["n_rows"].sum())
-            for name, *_rest in specs:
-                payloads[name].extend(bytes(p) for p in pdf[f"payload_{name}"])
-                n_items[name] += int(pdf[f"n_{name}"].sum())
-            # stream-fold per spec: bound live payloads at _FLUSH_AT
-            # each regardless of this task's fan-in (see tree_merge)
-            for name, _mk, _upd, mrg in specs:
-                if len(payloads[name]) >= _FLUSH_AT:
-                    payloads[name] = [mrg(payloads[name])]
-        have_rows = any(payloads[name] for name, *_ in specs)
-        if not have_rows and not emit_empty:
-            return
-        out: dict[str, list] = {"n_rows": [n_rows]}
-        for name, mk, _upd, mrg in specs:
-            out[f"payload_{name}"] = [
-                mrg(payloads[name]) if payloads[name] else mk().to_bytes()
-            ]
-            out[f"n_{name}"] = [n_items[name]]
-        yield pd.DataFrame(out)
-
-    def merge_partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from merge_rows(batches, emit_empty=False)
-
-    def merge_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from merge_rows(batches, emit_empty=True)
-
-    # same level topology as tree_merge: skip levels that don't reduce
-    # fan-in; otherwise ceil(P/fanout) tasks per level (~fanout payloads
-    # each) looping until one task can finish
-    level = partial
-    while n_parts > fanout:
-        n_tasks = -(-n_parts // fanout)
-        level = level.repartition(n_tasks).mapInPandas(merge_partial, schema=schema)
-        n_parts = n_tasks
-    return level.repartition(1).mapInPandas(merge_final, schema=schema)
+    partial = fold_sketches(df, specs, columns=columns)
+    return merge_tree(partial, _multi_rows(specs), fanout=fanout, n_parts=safe_partition_count(df))
 
 
 def collect_multi_bytes(
@@ -439,65 +431,11 @@ def build_multi_by_key(
     columns: list[str] | None = None,
     salt: int = 0,
 ) -> DataFrame:
-    """N sketches per key in ONE scan of the input.
-
-    Where ``build_by_key`` called N times costs N full corpus scans
-    (at 100 TB: N x 100 TB of I/O for the same bytes), this folds every
-    Arrow batch into all N accumulators per key in a single pass. The
-    shuffle still carries only sketch rows — one row per
-    (partition, key) with all N payloads side by side.
+    """N sketches per key in ONE scan of the input (``build_by_key``
+    called N times costs N full corpus scans). The shuffle carries one
+    row per (partition, key) with all N payloads side by side.
 
     -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
     """
-    cols = columns or df.columns
-    if key_col not in cols:
-        cols = [key_col, *cols]
-    df = df.select(*cols)
-    schema = "key string, n_rows bigint, " + ", ".join(
-        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
-    )
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs: dict[str, list] = {}  # key -> [acc_per_spec..., n_rows]
-        for batch in batches:
-            for key, sub in iter_key_slices(batch, key_col):
-                ent = accs.get(key)
-                if ent is None:
-                    ent = accs[key] = [[mk() for _, mk, _, _ in specs], 0]
-                for acc, (_, _, upd, _) in zip(ent[0], specs):
-                    upd(acc, sub)
-                ent[1] += sub.num_rows
-        if accs:
-            out: dict[str, list] = {
-                "key": [None if k is None else str(k) for k in accs],
-                "n_rows": [ent[1] for ent in accs.values()],
-            }
-            for i, (name, *_rest) in enumerate(specs):
-                out[f"payload_{name}"] = [ent[0][i].to_bytes() for ent in accs.values()]
-                out[f"n_{name}"] = [ent[0][i].n_items for ent in accs.values()]
-            yield pa.RecordBatch.from_pydict(out)
-
-    partial = df.mapInArrow(build, schema=schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {
-            "key": [pdf["key"].iloc[0]],
-            "n_rows": [int(pdf["n_rows"].sum())],
-        }
-        for name, _mk, _upd, mrg in specs:
-            out[f"payload_{name}"] = [mrg([bytes(p) for p in pdf[f"payload_{name}"]])]
-            out[f"n_{name}"] = [int(pdf[f"n_{name}"].sum())]
-        return pd.DataFrame(out)
-
-    if salt > 0:
-        # same skew bound as build_by_key: intermediate (key, salt) merge
-        # level caps any single task's fan-in at partitions/salt;
-        # merge_group ignores the extra _salt column so it serves both
-        # levels directly
-        first_payload = f"payload_{specs[0][0]}"
-        salted = partial.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(first_payload)), F.lit(salt))
-        )
-        level1 = salted.groupBy("key", "_salt").applyInPandas(merge_group, schema)
-        return level1.groupBy("key").applyInPandas(merge_group, schema)
-    return partial.groupBy("key").applyInPandas(merge_group, schema)
+    partial = fold_sketches(df, specs, key_col=key_col, columns=columns)
+    return merge_tree(partial, _multi_rows(specs, keyed=True), salt=salt)

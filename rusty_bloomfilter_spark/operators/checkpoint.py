@@ -17,14 +17,12 @@ sketch rows, never raw data.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from dataclasses import dataclass
-
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .aggregate import MergePayloadsFn, UpdateFn, tree_merge
+from .aggregate import MergePayloadsFn, UpdateFn, fold_sketches, tree_merge
 
 CKPT_SCHEMA = "file string, payload binary, n_items bigint, n_rows bigint"
 
@@ -42,39 +40,18 @@ def _file_sketches(
     update: UpdateFn,
     columns: list[str],
 ) -> DataFrame:
-    """One sketch row per input file. Partitions align with file splits,
-    so this is a per-partition dict keyed by file name — a big file read
-    as several splits yields several rows that merge later (OR-merge is
-    associative, so split boundaries don't matter)."""
+    """One sketch row per input file: the keyed stage-1 fold on
+    input_file_name(), with no merge. A big file read as several splits
+    yields several rows that merge later (OR-merge is associative, so
+    split boundaries don't matter)."""
     picked = df.select(F.input_file_name().alias("_file"), *columns)
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import numpy as np
-        import pyarrow as pa
-
-        accs: dict[str, object] = {}
-        rows: dict[str, int] = {}
-        for batch in batches:
-            fnames = batch.column("_file").to_numpy(zero_copy_only=False)
-            for fname in np.unique(fnames):
-                sub = batch.filter(pa.array(fnames == fname))
-                acc = accs.get(fname)
-                if acc is None:
-                    acc = accs[fname] = make_empty()
-                    rows[fname] = 0
-                update(acc, sub)
-                rows[fname] += sub.num_rows
-        if accs:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "file": [str(f) for f in accs],
-                    "payload": [a.to_bytes() for a in accs.values()],
-                    "n_items": [a.n_items for a in accs.values()],
-                    "n_rows": [rows[f] for f in accs],
-                }
-            )
-
-    return picked.mapInArrow(build, schema=CKPT_SCHEMA)
+    folded = fold_sketches(picked, [("file", make_empty, update, None)], key_col="_file")
+    return folded.select(
+        F.col("key").alias("file"),
+        F.col("payload_file").alias("payload"),
+        F.col("n_file").alias("n_items"),
+        "n_rows",
+    )
 
 
 @dataclass

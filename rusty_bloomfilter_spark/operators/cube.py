@@ -27,20 +27,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sketches import HllSketch
+from .sketches import HllSketch, merge_payloads_agg_udf
 
 # unit separator: cannot appear in real dim values (control char); a
 # NULL dim value is encoded distinctly from the string "NULL"
 _SEP = "\x1f"
 _NULL = "\x00"
-
-
-def _merge_agg_udf():
-    # canonical definition lives in operators/sketches.py (one copy;
-    # adds the NULL-payload guard this local copy lacked)
-    from .sketches import merge_payloads_agg_udf
-
-    return merge_payloads_agg_udf()
 
 
 def _sum_agg_udf():
@@ -79,7 +71,7 @@ def sketch_rollup(
     for d in dims:
         if d not in cells.columns:
             raise ValueError(f"dim column {d!r} not in cells frame")
-    merge = _merge_agg_udf()
+    merge = merge_payloads_agg_udf()
     n_sum = _sum_agg_udf()
     levels = []
     for lvl in range(len(dims), -1, -1):

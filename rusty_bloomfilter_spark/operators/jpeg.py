@@ -305,11 +305,6 @@ class _BitReader:
         return v & 0xFF
 
 
-def _extend(v: int, t: int) -> int:
-    """F.2.2.1 EXTEND: map t raw bits to the signed coefficient."""
-    return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 class _BitWriter:
     __slots__ = ("out", "acc", "nbits")
 

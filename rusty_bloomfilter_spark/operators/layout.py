@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch import KLLSketch, merge_sketch_payloads
-from .aggregate import build_multi, collect_sketch_bytes
+from .aggregate import build_multi
 from .sketches import KllQuantiles
 
 
@@ -51,7 +51,7 @@ def range_boundaries(
     correspondingly fewer, still-correct buckets."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    payload, _ = collect_sketch_bytes(KllQuantiles(k=k, col=col).build(df, fanout=fanout))
+    payload, _ = KllQuantiles(k=k, col=col).build_bytes(df, fanout=fanout)
     sk = KLLSketch.from_bytes(payload)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     cuts = [float(sk.quantile(q)) for q in qs]

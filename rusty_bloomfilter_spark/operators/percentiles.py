@@ -45,12 +45,9 @@ def percentile_normalize(
     Two passes over the corpus (build, then annotate), zero joins,
     zero row shuffles; error <= the sketch's rank_error() uniformly.
     """
-    from .aggregate import collect_sketch_bytes
     from .sketches import KllQuantiles
 
-    payload, _ = collect_sketch_bytes(
-        KllQuantiles(k, col=value_col).build(df, fanout=fanout)
-    )
+    payload, _ = KllQuantiles(k, col=value_col).build_bytes(df, fanout=fanout)
     bc = df.sparkSession.sparkContext.broadcast(payload)
     # StructType.add MUTATES (and returns) the instance — calling it on
     # df.schema would corrupt the input frame's cached schema; build a

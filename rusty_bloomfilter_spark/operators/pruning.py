@@ -10,11 +10,11 @@ contain a key. Zero false negatives make the pruned scan's output
 provably equal to the full scan's; false positives only cost extra
 files, bounded by the configured p per file.
 
-Reuses the per-file sketch machinery the resumable checkpoint build
-already has (operators/checkpoint.py::_file_sketches) — the index IS a
-checkpoint-shaped frame (file, payload, n_items, n_rows), so it can be
-parqueted, unioned across snapshots, and OR-merged per file on
-compaction.
+Reuses the per-file sketch rows the resumable checkpoint build already
+has (operators/checkpoint.py::_file_sketches, aggregate's keyed fold on
+input_file_name()) — the index IS a checkpoint-shaped frame (file,
+payload, n_items, n_rows), so it can be parqueted, unioned across
+snapshots, and OR-merged per file on compaction.
 
 Reference semantics: `contains` zero-FN contract
 (/root/reference/src/bloomfilter/mod.rs:199-228); the file-pruning
@@ -100,6 +100,12 @@ def xor_file_index(df: DataFrame, *, key_col: str) -> DataFrame:
     return picked.groupBy("file").applyInArrow(build, CKPT_SCHEMA)
 
 
+_EMPTY_FILE_NAME = (
+    "index row with empty file name: bloom_file_index input must "
+    "come straight from a file source (input_file_name() was '')"
+)
+
+
 def _checked_file_name(name) -> str:
     """Fail loud where the mistake is: an empty file name means the
     indexed DataFrame was not straight from a file source
@@ -108,10 +114,7 @@ def _checked_file_name(name) -> str:
     'Can not create a Path from an empty string' at probe time."""
     name = str(name)
     if not name:
-        raise ValueError(
-            "index row with empty file name: bloom_file_index input must "
-            "come straight from a file source (input_file_name() was '')"
-        )
+        raise ValueError(_EMPTY_FILE_NAME)
     return name
 
 
@@ -132,19 +135,22 @@ def compact_index(*indexes: DataFrame) -> DataFrame:
         raise ValueError("compact_index needs at least one index frame")
 
     from ..sketch import merge_sketch_payloads
-    from .aggregate import keyed_payload_merge
-    from .checkpoint import CKPT_SCHEMA
+    from .aggregate import SketchRows, merge_tree
 
-    merge_file_group = keyed_payload_merge(
-        "file",
-        merge_fn=merge_sketch_payloads,
-        sum_cols=("n_items", "n_rows"),
-        key_out=_checked_file_name,
-    )
     unioned = indexes[0]
     for extra in indexes[1:]:
         unioned = unioned.unionByName(extra)
-    return unioned.groupBy("file").applyInPandas(merge_file_group, CKPT_SCHEMA)
+    # the _checked_file_name contract, JVM-side: fail loud on a '' file
+    checked = unioned.withColumn(
+        "file",
+        F.when(F.col("file") != "", F.col("file")).otherwise(
+            F.raise_error(F.lit(_EMPTY_FILE_NAME))
+        ),
+    )
+    rows = SketchRows(
+        CKPT_SCHEMA, (("payload", merge_sketch_payloads, None),), ("n_items", "n_rows"), ("file",)
+    )
+    return merge_tree(checked, rows)
 
 
 def prune_files(index: DataFrame, keys: Sequence[int]) -> list[str]:
@@ -175,9 +181,9 @@ def prune_files(index: DataFrame, keys: Sequence[int]) -> list[str]:
             )
 
     rows = index.select("file", "payload").mapInArrow(hit, schema="file string").collect()
-    # a file read as several splits has several index rows (checkpoint.py
-    # _file_sketches contract) — dedup so the pruned read never lists a
-    # file twice (parquet(*files) would duplicate its rows)
+    # a file read as several splits has several index rows (the keyed
+    # fold emits one row per (split, file)) — dedup so the pruned read
+    # never lists a file twice (parquet(*files) would duplicate its rows)
     return sorted({r["file"] for r in rows})
 
 

@@ -112,15 +112,6 @@ def weighted_bottom_k(
     )
 
 
-def duckdb_weighted_score(key_expr: str, weight_expr: str) -> str:
-    """DuckDB rendering of the A-ES score (same IEEE arithmetic)."""
-    h = duckdb_hash60(key_expr)
-    return (
-        f"round(-ln((CAST({h} AS DOUBLE) + 1.0) / 1152921504606846976.0)"
-        f" / CAST({weight_expr} AS DOUBLE), 10)"
-    )
-
-
 def kmv_group_sketches(df: DataFrame, group_col: str, key_col: str, k: int) -> DataFrame:
     """Per-group KMV sketch rows: the k smallest distinct key hashes of
     each group. -> (grp, h). One shuffle on the group key; window top-k

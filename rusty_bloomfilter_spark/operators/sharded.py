@@ -51,23 +51,29 @@ from pyspark.sql import functions as F
 
 from ..sketch import BlockedBloomFilter, merge_sketch_payloads, sketch_from_bytes
 from ..sketch.hashing import splitmix64
-from .aggregate import keyed_payload_merge
+from .aggregate import SketchRows, fold_sketches, merge_tree
 from .sketches import arrow_flat_tokens, flat_ngram_hashes
 
 SHARD_SALT = np.uint64(0xA076_1D64_78BD_642F)  # splitmix64 increment constant
 
+
+# OR-merge of sketch rows sharing one shard id: the build fan-in
+# (ShardedBloomSketch.build) and the cross-snapshot union
+# (plans/incremental.merge_shard_frames) both merge through this one
+# layout and aggregate's keyed merge level, so their semantics cannot
+# diverge (payload validation, schema, n_items accounting).
 SHARDED_SCHEMA = "shard int, payload binary, n_items bigint"
+SHARD_ROWS = SketchRows(SHARDED_SCHEMA, (("payload", merge_sketch_payloads, None),), keys=("shard",))
 
 
-# OR-merge sketch rows sharing one shard id -> one row. THE shard-wise
-# merge: the build fan-in (ShardedBloomSketch.build) and the
-# cross-snapshot union (plans/incremental.merge_shard_frames) both go
-# through this single function so their semantics cannot diverge
-# (payload validation, schema, n_items accounting). Body shared with
-# every other single-payload keyed merge via aggregate.
-merge_shard_group = keyed_payload_merge(
-    "shard", merge_fn=merge_sketch_payloads, key_out=int
-)
+def _add_counted_hashes(acc: BlockedBloomFilter, batch) -> None:
+    """Routed-build update over (shard, h, cnt) rows: insert the hashes
+    and count n_items as TOKEN insertions (pre-dedup) — the count is
+    baked into the wire header, so bitwise parity with the map-side
+    build requires it."""
+    h = batch.column("h").to_numpy(zero_copy_only=False).view(np.uint64)
+    acc.add_hashes(h)
+    acc.n_items += int(batch.column("cnt").to_numpy(zero_copy_only=False).sum()) - len(h)
 
 
 def shard_of(hashes: np.ndarray, n_shards: int) -> np.ndarray:
@@ -176,7 +182,7 @@ class ShardedBloomSketch:
                 )
 
         partial = df.select(self.col).mapInArrow(build_partition, schema=SHARDED_SCHEMA)
-        return partial.groupBy("shard").applyInPandas(merge_shard_group, SHARDED_SCHEMA)
+        return merge_tree(partial, SHARD_ROWS)
 
     def _hash_rows(self, df: DataFrame, *, with_counts: bool = False) -> DataFrame:
         """(shard, h) per token — the narrow routing frame both the
@@ -223,52 +229,16 @@ class ShardedBloomSketch:
         return df.select(self.col).mapInArrow(rows, schema=schema)
 
     def _build_routed(self, df: DataFrame, shuffle_partitions: int | None) -> DataFrame:
-        make_empty = self._empty
+        # hash partitioning puts ALL of a shard's rows in one partition,
+        # so the keyed stage-1 fold over them is final — no re-merge
         n_parts = int(shuffle_partitions or self.n_shards)
         routedf = self._hash_rows(df, with_counts=True).repartition(n_parts, "shard")
-
-        def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
-            accs: dict[int, BlockedBloomFilter] = {}
-            items: dict[int, int] = {}
-            for batch in batches:
-                sh = batch.column("shard").to_numpy(zero_copy_only=False)
-                h = batch.column("h").to_numpy(zero_copy_only=False).view(np.uint64)
-                cnt = batch.column("cnt").to_numpy(zero_copy_only=False)
-                order = np.argsort(sh, kind="stable")
-                ss = sh[order]
-                hh = h[order]
-                cc = cnt[order]
-                starts = np.concatenate(([0], np.flatnonzero(ss[1:] != ss[:-1]) + 1))
-                bounds = np.concatenate((starts, [len(ss)]))
-                for i, s in enumerate(ss[starts]):
-                    s = int(s)
-                    acc = accs.get(s)
-                    if acc is None:
-                        acc = accs[s] = make_empty()
-                        items[s] = 0
-                    seg_items = int(cc[bounds[i] : bounds[i + 1]].sum())
-                    acc.add_hashes(hh[bounds[i] : bounds[i + 1]])
-                    # n_items = TOKEN insertions (pre-dedup): correct the
-                    # filter's internal counter (baked into the wire
-                    # header, so bitwise parity with the map-side build
-                    # requires it) by the dedup delta
-                    acc.n_items += seg_items - (bounds[i + 1] - bounds[i])
-                    items[s] += seg_items
-            if accs:
-                # hash partitioning puts ALL of a shard's rows in this
-                # partition — these accumulators are final, no re-merge
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(list(accs.keys()), type=pa.int32()),
-                        pa.array([a.to_bytes() for a in accs.values()], type=pa.binary()),
-                        pa.array([items[s] for s in accs.keys()], type=pa.int64()),
-                    ],
-                    names=["shard", "payload", "n_items"],
-                )
-
-        return routedf.mapInArrow(fold, schema=SHARDED_SCHEMA)
+        spec = [("shard", self._empty, _add_counted_hashes, None)]
+        return fold_sketches(routedf, spec, key_col="shard").select(
+            F.col("key").cast("int").alias("shard"),
+            F.col("payload_shard").alias("payload"),
+            F.col("n_shard").alias("n_items"),
+        )
 
     # -- probe ---------------------------------------------------------
 

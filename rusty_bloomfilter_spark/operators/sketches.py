@@ -1,14 +1,15 @@
-"""Sketch builders over DataFrames: Bloom, HLL, CMS, KLL.
+"""Distributed sketches over DataFrames: Bloom, HLL, CMS, KLL and friends.
 
-Each builder wires a numpy sketch core (..sketch) into the tree-merge
-topology of .aggregate. Updates consume whole Arrow batches — ragged
-``tokens`` arrays are flattened with offsets in C (np.concatenate), so
-there is no per-row Python in the hot path (BASELINE.json input_hint).
+Each sketch class is a spec — ``_empty`` / ``_update`` over Arrow batches,
+plus its merge — wired into the single fold + tree-merge pipeline of
+.aggregate by one shared base (``_ColumnSketch``); the classes add only
+their own probe and estimate methods. Updates consume whole Arrow
+batches — ragged ``tokens`` arrays are flattened with offsets in C
+(np.concatenate), so there is no per-row Python in the hot path
+(BASELINE.json input_hint).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -28,6 +29,7 @@ from ..sketch import (
     merge_payloads,
     merge_sketch_payloads,
     ngram_hashes,
+    sketch_from_bytes,
     tokens_to_u64,
 )
 from ..sketch.hashing import splitmix64
@@ -111,7 +113,6 @@ def dedup_counts(flat: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
     counts = np.bincount(flat - lo, minlength=rng)
     nz = np.flatnonzero(counts)
     return (nz + lo).astype(flat.dtype, copy=False), counts[nz]
-
 
 
 def _scalar_values(batch, col: str) -> np.ndarray:
@@ -254,16 +255,158 @@ def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarr
 
 
 # ---------------------------------------------------------------------------
+# Shared build surface and dedup updates
+# ---------------------------------------------------------------------------
+
+
+def add_idempotent(acc, toks: np.ndarray) -> None:
+    """Insert-idempotent update (Bloom, blocked Bloom, HLL): insert the
+    batch's distinct values — they set the same bits/registers — and
+    correct n_items to the occurrence count (baked into the wire header:
+    partition invariance)."""
+    dc = dedup_counts(toks)
+    if dc is None:
+        acc.add_tokens(toks)
+    else:
+        acc.add_tokens(dc[0])
+        acc.n_items += toks.size - dc[0].size
+
+
+def add_weighted(acc, toks: np.ndarray) -> None:
+    """Multiplicity-weighted update (CMS, AMS, Misra-Gries): the sketch
+    consumes (distinct value, count) natively; bincount weights stay
+    small exact ints, so the table bits are identical to a per-token
+    insert and n_items needs no correction."""
+    dc = dedup_counts(toks)
+    if dc is None:
+        acc.add_tokens(toks)
+    else:
+        acc.add_u64(tokens_to_u64(dc[0]), dc[1])
+
+
+class _ColumnSketch:
+    """A sketch over one column, built through .aggregate: subclasses
+    set ``col`` and define ``_empty()`` and ``_update(acc, batch)``."""
+
+    col: str
+    _merge = staticmethod(merge_sketch_payloads)
+
+    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
+        """-> single-row DataFrame (payload binary, n_items bigint)."""
+        return build_sketch(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
+
+    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
+        return collect_sketch_bytes(self.build(df, fanout=fanout))
+
+    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
+        """-> DataFrame (key, payload, n_items), one sketch per key (map-side
+        combine; sketch rows only on the shuffle)."""
+        return build_by_key(
+            df, key_col, self._empty, self._update, self._merge,
+            columns=[key_col, self.col], salt=salt,
+        )
+
+
+class _TokenSketch(_ColumnSketch):
+    """A sketch over a token-array column, or a scalar int column when
+    ``scalar`` (exact int64 values, no float64 rounding of full-range
+    ids; no dedup fold). ``ngram`` > 1 inserts within-row n-gram hashes
+    through ``_add_hashes`` (membership sketches only)."""
+
+    scalar: bool = False
+    ngram: int = 1
+    _add = staticmethod(add_idempotent)
+
+    def _update(self, acc, batch) -> None:
+        if self.scalar:
+            vals = _scalar_values(batch, self.col)
+            if vals.size:
+                acc.add_tokens(vals)
+        elif self.ngram == 1:
+            toks = arrow_flat_tokens(batch, self.col)
+            if toks.size:
+                self._add(acc, toks)
+        else:
+            flat = arrow_flat_tokens(batch, self.col)
+            lengths = arrow_row_lengths(batch, self.col)
+            h = flat_ngram_hashes(flat, lengths, self.ngram)
+            if h.size:
+                self._add_hashes(acc, h)
+
+
+class _MembershipSketch(_TokenSketch):
+    """A membership filter (Bloom, blocked, counting): probes decode
+    the payload by its wire magic inside the worker."""
+
+    def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
+        """Vectorized membership probe for a scalar int column.
+        Deserializes the broadcast filter once per python worker."""
+        return broadcast_probe_udf(payload, spark)
+
+    def count_contained(self, df: DataFrame, payload: bytes, spark: SparkSession | None = None) -> tuple[int, int]:
+        """Probe EVERY token of the column against the filter without
+        exploding rows; returns (hits, total)."""
+        return count_contained_in(df, payload, self.col, scalar=self.scalar, spark=spark)
+
+
+class _ValueSketch(_ColumnSketch):
+    """A quantile sketch over a numeric scalar column."""
+
+    def _update(self, acc, batch) -> None:
+        vals = batch.column(self.col).to_numpy(zero_copy_only=False)
+        acc.update_batch(np.asarray(vals, dtype=np.float64))
+
+    def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
+        payload, _ = self.build_bytes(df, fanout=fanout)
+        sk = sketch_from_bytes(payload)
+        return [float(sk.quantile(q)) for q in qs]
+
+    def quantiles_by_key(
+        self, df: DataFrame, key_col: str, qs: list[float], *, salt: int = 0
+    ) -> DataFrame:
+        """-> (key, q, value) per-key quantile estimates."""
+        keyed = self.build_by_key(df, key_col, salt=salt)
+        qs_list = [float(q) for q in qs]
+
+        def stats(batches):
+            import pyarrow as pa
+
+            for b in batches:
+                keys, qcol, vals = [], [], []
+                for key, payload in zip(
+                    b.column("key").to_pylist(), b.column("payload").to_pylist()
+                ):
+                    sk = sketch_from_bytes(bytes(payload))
+                    for q in qs_list:
+                        keys.append(key)
+                        qcol.append(q)
+                        vals.append(float(sk.quantile(q)))
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "key": pa.array(keys, type=pa.string()),
+                        "q": pa.array(qcol, type=pa.float64()),
+                        "value": pa.array(vals, type=pa.float64()),
+                    }
+                )
+
+        return keyed.mapInArrow(stats, schema="key string, q double, value double")
+
+
+# ---------------------------------------------------------------------------
 # Bloom
 # ---------------------------------------------------------------------------
 
 
-class BloomSketch:
+class BloomSketch(_MembershipSketch):
     """Distributed Bloom filter over a token-array (or scalar) column.
 
     ``ngram`` > 1 inserts within-row token n-grams instead of single
     tokens (the north star's "token n-grams and doc_ids").
     """
+
+    _merge = staticmethod(merge_payloads)
 
     def __init__(self, shape: Shape, *, col: str = "tokens", ngram: int = 1, scalar: bool = False):
         self.shape = shape
@@ -275,35 +418,14 @@ class BloomSketch:
     def for_np(cls, n: int, p: float, **kw) -> "BloomSketch":
         return cls(Shape.for_np(n, p), **kw)
 
-    # update fn shared by all build paths (consumes Arrow RecordBatches)
-    def _update(self, acc: BloomFilter, batch) -> None:
-        if self.scalar:
-            vals = _scalar_values(batch, self.col)
-            if vals.size:
-                acc.add_tokens(vals)
-        elif self.ngram == 1:
-            toks = arrow_flat_tokens(batch, self.col)
-            if toks.size:
-                dc = dedup_counts(toks)
-                if dc is None:
-                    acc.add_tokens(toks)
-                else:
-                    # idempotent insert: distinct values set the same
-                    # bits; n_items corrected to the occurrence count
-                    # (baked into the wire header — partition invariance)
-                    acc.add_tokens(dc[0])
-                    acc.n_items += toks.size - dc[0].size
-        else:
-            flat = arrow_flat_tokens(batch, self.col)
-            lengths = arrow_row_lengths(batch, self.col)
-            h = flat_ngram_hashes(flat, lengths, self.ngram)
-            if h.size:
-                # the canonical pair derivation — must stay bit-identical
-                # to BloomFilter.add_ngrams / every contains_u64 probe
-                from ..sketch import hash_pair
+    @staticmethod
+    def _add_hashes(acc: BloomFilter, h: np.ndarray) -> None:
+        # the canonical pair derivation — must stay bit-identical
+        # to BloomFilter.add_ngrams / every contains_u64 probe
+        from ..sketch import hash_pair
 
-                h1, h2 = hash_pair(h)
-                acc.add_hashes(h1, h2)
+        h1, h2 = hash_pair(h)
+        acc.add_hashes(h1, h2)
 
     def _empty(self):
         # adaptive accumulator: O(set bits) memory until the index
@@ -313,34 +435,7 @@ class BloomSketch:
         from ..sketch.bloom import SparseBloomBuilder
 
         return SparseBloomBuilder(self.shape)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        """-> single-row DataFrame (payload binary, n_items bigint)."""
-        return build_sketch(
-            df, self._empty, self._update, merge_payloads, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """-> DataFrame (key, payload, n_items), one Bloom per key."""
-        return build_by_key(
-            df,
-            key_col,
-            self._empty,
-            self._update,
-            merge_payloads,
-            columns=[key_col, self.col],
-            salt=salt,
-        )
-
     # -- probing -----------------------------------------------------------
-
-    def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
-        """Vectorized membership probe for a scalar int token column.
-        Deserializes the broadcast filter once per python worker."""
-        return broadcast_probe_udf(payload, spark)
 
     def contained_fraction_udf(self, payload: bytes, spark: SparkSession | None = None):
         """For an array<int> column: fraction of the row's tokens present
@@ -378,11 +473,6 @@ class BloomSketch:
 
         return probe
 
-    def count_contained(self, df: DataFrame, payload: bytes, spark: SparkSession | None = None) -> tuple[int, int]:
-        """Probe EVERY token of the array column against the filter
-        without exploding rows; returns (hits, total)."""
-        return count_contained_in(df, payload, self.col, scalar=self.scalar, spark=spark)
-
     def semi_join_filter(self, probe_df: DataFrame, payload: bytes, col: str) -> DataFrame:
         """Bloom-filtered semi join: keep rows whose `col` might be in the
         build side — zero false negatives, FPR <= shape bound."""
@@ -402,7 +492,7 @@ class BloomSketch:
 # ---------------------------------------------------------------------------
 
 
-class BlockedBloomSketch:
+class BlockedBloomSketch(_MembershipSketch):
     """Distributed split-block Bloom filter (see ..sketch.blocked for
     the published design). Same pipeline as BloomSketch; ~3x per-core
     build/probe throughput and cache-friendly under full parallelism —
@@ -422,47 +512,9 @@ class BlockedBloomSketch:
     def _empty(self) -> BlockedBloomFilter:
         return BlockedBloomFilter(self.proto.n_blocks)
 
-    def _update(self, acc: BlockedBloomFilter, batch) -> None:
-        if self.scalar:
-            vals = _scalar_values(batch, self.col)
-            if vals.size:
-                acc.add_tokens(vals)
-        elif self.ngram == 1:
-            toks = arrow_flat_tokens(batch, self.col)
-            if toks.size:
-                dc = dedup_counts(toks)
-                if dc is None:
-                    acc.add_tokens(toks)
-                else:
-                    acc.add_tokens(dc[0])
-                    acc.n_items += toks.size - dc[0].size
-        else:
-            flat = arrow_flat_tokens(batch, self.col)
-            lengths = arrow_row_lengths(batch, self.col)
-            h = flat_ngram_hashes(flat, lengths, self.ngram)
-            if h.size:
-                acc.add_hashes(h)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, merge_sketch_payloads,
-            columns=[self.col], fanout=fanout,
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, merge_sketch_payloads,
-            columns=[key_col, self.col], salt=salt,
-        )
-
-    def count_contained(self, df: DataFrame, payload: bytes, spark: SparkSession | None = None) -> tuple[int, int]:
-        return count_contained_in(df, payload, self.col, scalar=self.scalar, spark=spark)
-
-    def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
-        return broadcast_probe_udf(payload, spark)
+    @staticmethod
+    def _add_hashes(acc: BlockedBloomFilter, h: np.ndarray) -> None:
+        acc.add_hashes(h)
 
 
 # ---------------------------------------------------------------------------
@@ -470,7 +522,7 @@ class BlockedBloomSketch:
 # ---------------------------------------------------------------------------
 
 
-class HllSketch:
+class HllSketch(_TokenSketch):
     """Distributed distinct-count over tokens (array col) or a scalar col."""
 
     def __init__(self, p: int = 14, *, col: str = "tokens", scalar: bool = False):
@@ -481,46 +533,9 @@ class HllSketch:
     def _empty(self) -> HyperLogLog:
         return HyperLogLog(self.p)
 
-    def _update(self, acc: HyperLogLog, batch) -> None:
-        if self.scalar:
-            # same exact-int64 path as Bloom (no float64 rounding of
-            # full-range 64-bit ids, which would collapse distincts)
-            vals = _scalar_values(batch, self.col)
-            if vals.size:
-                acc.add_tokens(vals)
-        else:
-            toks = arrow_flat_tokens(batch, self.col)
-            if toks.size:
-                dc = dedup_counts(toks)
-                if dc is None:
-                    acc.add_tokens(toks)
-                else:
-                    # register max is insert-idempotent; n_items corrected
-                    # (in the wire header) for partition invariance
-                    acc.add_tokens(dc[0])
-                    acc.n_items += toks.size - dc[0].size
-
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def estimate(self, df: DataFrame, *, fanout: int = 16) -> float:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
+        payload, _ = self.build_bytes(df, fanout=fanout)
         return HyperLogLog.from_bytes(payload).estimate()
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df,
-            key_col,
-            self._empty,
-            self._update,
-            self._merge,
-            columns=[key_col, self.col],
-            salt=salt,
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -528,10 +543,12 @@ class HllSketch:
 # ---------------------------------------------------------------------------
 
 
-class CmsSketch:
+class CmsSketch(_TokenSketch):
     """Distributed token-frequency sketch (count-min). ``scalar=True``
     sketches a scalar key column (join-size estimation via
     ``CountMinSketch.inner_product``) instead of an array column."""
+
+    _add = staticmethod(add_weighted)
 
     def __init__(self, d: int = 5, w: int = 65536, *, col: str = "tokens", scalar: bool = False):
         self.d = d
@@ -542,42 +559,8 @@ class CmsSketch:
     def _empty(self) -> CountMinSketch:
         return CountMinSketch(self.d, self.w)
 
-    def _update(self, acc: CountMinSketch, batch) -> None:
-        if self.scalar:
-            vals = _scalar_values(batch, self.col)
-            if vals.size:
-                acc.add_tokens(vals)
-            return
-        toks = arrow_flat_tokens(batch, self.col)
-        if toks.size:
-            dc = dedup_counts(toks)
-            if dc is None:
-                acc.add_tokens(toks)
-            else:
-                # CMS adds multiplicities natively; bincount weights sum
-                # to small exact ints, so the table bits are identical
-                acc.add_u64(tokens_to_u64(dc[0]), dc[1])
-
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountMinSketch.from_bytes(payload).query_tokens(tokens)
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """One frequency sketch per key (map-side combine; sketch rows
-        only on the shuffle)."""
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -585,12 +568,14 @@ class CmsSketch:
 # ---------------------------------------------------------------------------
 
 
-class AmsSketch:
+class AmsSketch(_TokenSketch):
     """Distributed count sketch (AMS): UNBIASED two-sided frequency
     estimates plus the F2 second-moment estimate — the skew oracle
     behind operators/skew.key_skew_profile. ``scalar=True`` sketches a
     scalar shuffle/join-key column (the primary use); default sketches
     a token-array column like CmsSketch."""
+
+    _add = staticmethod(add_weighted)
 
     def __init__(self, d: int = 5, w: int = 8192, *, col: str = "tokens", scalar: bool = False):
         self.d = d
@@ -601,32 +586,6 @@ class AmsSketch:
     def _empty(self) -> CountSketch:
         return CountSketch(self.d, self.w)
 
-    def _update(self, acc: CountSketch, batch) -> None:
-        if self.scalar:
-            vals = _scalar_values(batch, self.col)
-            if vals.size:
-                acc.add_tokens(vals)
-            return
-        toks = arrow_flat_tokens(batch, self.col)
-        if toks.size:
-            dc = dedup_counts(toks)
-            if dc is None:
-                acc.add_tokens(toks)
-            else:
-                # like CMS: multiplicities add natively, bincount weights
-                # stay exact small ints, table bits identical
-                acc.add_u64(tokens_to_u64(dc[0]), dc[1])
-
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountSketch.from_bytes(payload).query_tokens(tokens)
 
@@ -636,12 +595,14 @@ class AmsSketch:
 # ---------------------------------------------------------------------------
 
 
-class MgSketch:
+class MgSketch(_TokenSketch):
     """Distributed Misra–Gries heavy-hitter summary (the DETERMINISTIC
     frequency sibling: counter lower bounds with a tracked undercount
     cap, so summary keys are a provable superset of every key with
     frequency > n_items/(capacity+1) — no distributional assumption,
     unlike the local top-k margin contract)."""
+
+    _add = staticmethod(add_weighted)
 
     def __init__(self, capacity: int = 1024, *, col: str = "tokens"):
         self.capacity = capacity
@@ -650,35 +611,13 @@ class MgSketch:
     def _empty(self) -> MisraGries:
         return MisraGries(self.capacity)
 
-    def _update(self, acc: MisraGries, batch) -> None:
-        toks = arrow_flat_tokens(batch, self.col)
-        if toks.size:
-            dc = dedup_counts(toks)
-            if dc is None:
-                acc.add_tokens(toks)
-            else:
-                # MG consumes multiplicities natively (exact keyed add
-                # then one decrement round), like CMS — no n_items
-                # correction needed
-                acc.add_u64(tokens_to_u64(dc[0]), dc[1])
-
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
 
 # ---------------------------------------------------------------------------
-# KLL quantiles
+# Quantiles: t-digest, KLL, DDSketch
 # ---------------------------------------------------------------------------
 
 
-class TDigestQuantiles:
+class TDigestQuantiles(_ValueSketch):
     """Distributed t-digest quantiles over a numeric scalar column
     (tail-accurate alternative to KLL; both named by the north rule)."""
 
@@ -691,32 +630,8 @@ class TDigestQuantiles:
 
         return TDigest(self.compression)
 
-    def _update(self, acc, batch) -> None:
-        vals = batch.column(self.col).to_numpy(zero_copy_only=False)
-        acc.update_batch(np.asarray(vals, dtype=np.float64))
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        from ..sketch import TDigest
-
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
-        sk = TDigest.from_bytes(payload)
-        return [float(sk.quantile(q)) for q in qs]
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
-
-
-class KllQuantiles:
+class KllQuantiles(_ValueSketch):
     """Distributed quantile sketch over a numeric scalar column."""
 
     def __init__(self, k: int = 200, *, col: str = "n_tok"):
@@ -726,55 +641,8 @@ class KllQuantiles:
     def _empty(self) -> KLLSketch:
         return KLLSketch(self.k)
 
-    def _update(self, acc: KLLSketch, batch) -> None:
-        vals = batch.column(self.col).to_numpy(zero_copy_only=False)
-        acc.update_batch(np.asarray(vals, dtype=np.float64))
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
-        sk = KLLSketch.from_bytes(payload)
-        return [float(sk.quantile(q)) for q in qs]
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """One quantile sketch per key."""
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
-
-    def quantiles_by_key(
-        self, df: DataFrame, key_col: str, qs: list[float], *, salt: int = 0
-    ) -> DataFrame:
-        """-> (key, q, value) per-key quantile estimates."""
-        keyed = self.build_by_key(df, key_col, salt=salt)
-        qs_list = list(qs)
-
-        def stats(batches):
-            import pyarrow as pa
-
-            for b in batches:
-                keys, qcol, vals = [], [], []
-                for key, payload in zip(
-                    b.column("key").to_pylist(), b.column("payload").to_pylist()
-                ):
-                    sk = KLLSketch.from_bytes(bytes(payload))
-                    for q in qs_list:
-                        keys.append(key)
-                        qcol.append(q)
-                        vals.append(float(sk.quantile(q)))
-                yield pa.RecordBatch.from_pydict({"key": keys, "q": qcol, "value": vals})
-
-        return keyed.mapInArrow(stats, schema="key string, q double, value double")
-
-
-class DDQuantiles:
+class DDQuantiles(_ValueSketch):
     """Distributed RELATIVE-error quantile sketch over a numeric scalar
     column (sketch/ddsketch.py). Same tree-merge topology as
     KllQuantiles but with the stronger algebra: DDSketch bucket counts
@@ -800,66 +668,22 @@ class DDQuantiles:
         vals = vals[np.isfinite(vals)]  # NULL floats arrive as NaN: skip rows
         acc.add(vals)
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
-        return [float(v) for v in DDSketch.from_bytes(payload).quantiles(list(qs))]
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
-
-    def quantiles_by_key(
-        self, df: DataFrame, key_col: str, qs: list[float], *, salt: int = 0
-    ) -> DataFrame:
-        """-> (key, q, value) per-key relative-error quantile estimates."""
-        keyed = self.build_by_key(df, key_col, salt=salt)
-        qs_list = [float(q) for q in qs]
-
-        def stats(batches):
-            import pyarrow as pa
-
-            for b in batches:
-                keys, qcol, vals = [], [], []
-                for key, payload in zip(
-                    b.column("key").to_pylist(), b.column("payload").to_pylist()
-                ):
-                    sk = DDSketch.from_bytes(bytes(payload))
-                    for q in qs_list:
-                        keys.append(key)
-                        qcol.append(q)
-                        vals.append(float(sk.quantile(q)))
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "key": pa.array(keys, type=pa.string()),
-                        "q": pa.array(qcol, type=pa.float64()),
-                        "value": pa.array(vals, type=pa.float64()),
-                    }
-                )
-
-        return keyed.mapInArrow(stats, schema="key string, q double, value double")
-
 
 # ---------------------------------------------------------------------------
 # Counting Bloom (deletable membership)
 # ---------------------------------------------------------------------------
 
 
-class CountingBloomSketch:
+class CountingBloomSketch(_MembershipSketch):
     """Distributed counting Bloom filter over a scalar int64 column —
     the deletable membership sketch (sketch/counting.py). Build the
     corpus filter AND the revoke-set filter with the same mergeable
     pipeline, then ``subtract`` once on two payloads; remaining items
     keep the zero-false-negative guarantee (saturated counters are
-    sticky, never lowered)."""
+    sticky, never lowered). Always ``scalar``: the update takes no dedup
+    fold, since multiplicity IS the counter state."""
+
+    scalar = True
 
     def __init__(self, shape: Shape, *, col: str):
         self.shape = shape
@@ -873,27 +697,3 @@ class CountingBloomSketch:
         from ..sketch.counting import CountingBloomFilter
 
         return CountingBloomFilter.empty(self.shape)
-
-    def _update(self, acc, batch) -> None:
-        vals = _scalar_values(batch, self.col)
-        if vals.size:
-            # NO dedup fold: multiplicity IS the counter state
-            acc.add_tokens(vals)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df,
-            self._empty,
-            self._update,
-            merge_sketch_payloads,
-            columns=[self.col],
-            fanout=fanout,
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
-    def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
-        """Vectorized membership probe for a scalar int column against
-        a (possibly subtracted) CBF payload."""
-        return broadcast_probe_udf(payload, spark)

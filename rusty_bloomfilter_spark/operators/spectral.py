@@ -18,69 +18,46 @@ shipped in the payload.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..sketch import FrequentDirections, GramMatrix, merge_sketch_payloads
-from .aggregate import build_sketch, collect_sketch_bytes
+from ..sketch import FrequentDirections, GramMatrix
 from .similarity import _stack_rows
+from .sketches import _ColumnSketch
 
 
-class GramSketch:
-    """Distributed exact Gram accumulator over an array<float> column.
-    NULL / wrong-width rows are skipped (same tolerance contract as the
-    ANN operators — one bad row must not abort a corpus job)."""
+class _EmbeddingSketch(_ColumnSketch):
+    """A matrix sketch over an array<float> column. NULL / wrong-width
+    rows are skipped (same tolerance contract as the ANN operators — one
+    bad row must not abort a corpus job)."""
+
+    def _update(self, acc, batch) -> None:
+        mat, _ = _stack_rows(batch.column(self.col), self.dim)
+        if mat.shape[0]:
+            acc.add_rows(mat)
+
+
+class GramSketch(_EmbeddingSketch):
+    """Distributed exact Gram accumulator over an array<float> column."""
 
     def __init__(self, dim: int, *, vec_col: str = "embedding"):
         self.dim = dim
-        self.vec_col = vec_col
+        self.col = vec_col
 
     def _empty(self) -> GramMatrix:
         return GramMatrix(self.dim)
 
-    def _update(self, acc: GramMatrix, batch) -> None:
-        mat, _ = _stack_rows(batch.column(self.vec_col), self.dim)
-        if mat.shape[0]:
-            acc.add_rows(mat)
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
-
-
-class FreqDirsSketch:
+class FreqDirsSketch(_EmbeddingSketch):
     """Distributed Frequent Directions over an array<float> column."""
 
     def __init__(self, ell: int, dim: int, *, vec_col: str = "embedding"):
         self.ell = ell
         self.dim = dim
-        self.vec_col = vec_col
+        self.col = vec_col
 
     def _empty(self) -> FrequentDirections:
         return FrequentDirections(self.ell, self.dim)
-
-    def _update(self, acc: FrequentDirections, batch) -> None:
-        mat, _ = _stack_rows(batch.column(self.vec_col), self.dim)
-        if mat.shape[0]:
-            acc.add_rows(mat)
-
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
 
 
 def embedding_gram(

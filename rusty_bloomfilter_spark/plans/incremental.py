@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.aggregate import merge_tree
 from ..operators.cache import tie
-from ..operators.sharded import SHARDED_SCHEMA, ShardedBloomSketch
+from ..operators.sharded import SHARD_ROWS, ShardedBloomSketch
 
 
 def _id_key(df: DataFrame, id_col: str):
@@ -61,12 +62,8 @@ def doc_fingerprints(
 def merge_shard_frames(a: DataFrame, b: DataFrame) -> DataFrame:
     """Shard-wise OR of two sharded sketch frames (same n_shards and
     per-shard shape) -> one row per shard. Shares the single shard-merge
-    function with ShardedBloomSketch.build."""
-    from ..operators.sharded import merge_shard_group
-
-    return a.unionByName(b).groupBy("shard").applyInPandas(
-        merge_shard_group, SHARDED_SCHEMA
-    )
+    layout with ShardedBloomSketch.build."""
+    return merge_tree(a.unionByName(b), SHARD_ROWS)
 
 
 def incremental_dedup(

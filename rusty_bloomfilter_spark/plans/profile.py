@@ -50,21 +50,6 @@ def bloom_stats_df(keyed: DataFrame) -> DataFrame:
     return keyed.mapInPandas(stats, schema=_STATS_SCHEMA)
 
 
-def _hll_stats_df(keyed: DataFrame) -> DataFrame:
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "source": list(pdf["key"]),
-                    "distinct_tokens_est": [
-                        HyperLogLog.from_bytes(bytes(p)).estimate() for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return keyed.mapInPandas(stats, schema="source string, distinct_tokens_est double")
-
-
 def token_profile(
     spark: SparkSession,
     sequences: DataFrame,
@@ -134,13 +119,7 @@ def token_profile(
         cs = cnt.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
         return ids, cs
 
-    def bloom_upd(acc, batch):
-        ids, cs = _counted_vals(batch)
-        if ids.size:
-            acc.add_tokens(ids)
-            acc.n_items += int(cs.sum()) - ids.size
-
-    def hll_upd(acc, batch):
+    def counted_upd(acc, batch):  # Bloom and HLL alike: insert-idempotent
         ids, cs = _counted_vals(batch)
         if ids.size:
             acc.add_tokens(ids)
@@ -165,8 +144,8 @@ def token_profile(
         counts,
         "source",
         [
-            ("bloom", bloom._empty, bloom_upd, merge_payloads),
-            ("hll", hll._empty, hll_upd, merge_sketch_payloads),
+            ("bloom", bloom._empty, counted_upd, merge_payloads),
+            ("hll", hll._empty, counted_upd, merge_sketch_payloads),
             ("docs", _DocCounter, docs_upd, lambda payloads: b""),
         ],
         columns=["source", "tok", "cnt", "n_first"],

@@ -91,6 +91,18 @@ def _scan_bytes_under(path: str, cap: int) -> int | None:
         return None
 
 
+def _open_cost_bytes(spark: SparkSession) -> int | None:
+    """spark.sql.files.openCostInBytes in bytes, parsed by Spark's own
+    byte-string rules (so '4m' / '4mb' are 4 MiB, a bare number is
+    bytes); None when the value does not parse."""
+    value = spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
+    try:
+        utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+        return int(utils.byteStringAsBytes(value))
+    except Exception:
+        return None
+
+
 def fan_out_small_scan(
     spark: SparkSession, df: DataFrame, *, path: str | None = None
 ) -> DataFrame:
@@ -108,25 +120,14 @@ def fan_out_small_scan(
     splits iff total bytes < cores * openCost. For a local ``path``
     that is a couple of stat() calls (early-exit walk); the plan-probe
     fallback (safe_partition_count, ~0.2s of driver work per call —
-    measured) only runs for non-statable sources.
+    measured) only runs for non-statable sources or an openCostInBytes
+    that does not parse.
     """
     from ..operators.aggregate import safe_partition_count
 
     target = spark.sparkContext.defaultParallelism
-    if path is not None:
-        try:
-            open_cost = int(
-                "".join(
-                    c
-                    for c in spark.conf.get(
-                        "spark.sql.files.openCostInBytes", "4194304"
-                    )
-                    if c.isdigit()
-                )
-                or "4194304"
-            )
-        except Exception:
-            open_cost = 4194304
+    open_cost = _open_cost_bytes(spark) if path is not None else None
+    if open_cost is not None:
         cap = target * open_cost
         got = _scan_bytes_under(path, cap)
         if got is not None:

@@ -126,7 +126,7 @@ def test_ngram_jaccard_restricts_before_self_join(spark):
 
 def test_salted_keyed_build_has_two_merge_levels(spark):
     """salt>0 inserts an intermediate (key, salt) merge stage bounding
-    any single task's fan-in — two FlatMapGroupsInPandas levels."""
+    any single task's fan-in — two FlatMapGroupsInArrow levels."""
     from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
     from rusty_bloomfilter_spark.sources import sequences_from_documents
 
@@ -136,8 +136,8 @@ def test_salted_keyed_build_has_two_merge_levels(spark):
     plan_plain = plan_of(sk.build_by_key(seq, "source"))
     # AQE may print operators in both initial and final plans; compare
     # relative structure: salted has twice the group-merge levels
-    n_salted = plan_salted.count("FlatMapGroupsInPandas")
-    n_plain = plan_plain.count("FlatMapGroupsInPandas")
+    n_salted = plan_salted.count("FlatMapGroupsInArrow")
+    n_plain = plan_plain.count("FlatMapGroupsInArrow")
     assert n_plain >= 1 and n_salted == 2 * n_plain
 
 

@@ -217,3 +217,27 @@ def test_split_corrupt_survives_free_and_eviction(spark, tmp_path):
     rows = bad.collect()  # must recompute, not raise
     assert len(rows) == 1 and rows[0]["raw_line"] == "broken line"
     assert "doc_id" in bad.columns  # partially-parsed fields for triage
+
+
+@pytest.mark.parametrize(
+    "open_cost, fans_out",
+    [("4m", True), ("4mb", True), ("1k", False)],
+)
+def test_fan_out_parses_byte_suffixed_open_cost(spark, tmp_path, open_cost, fans_out):
+    """openCostInBytes is read with Spark's byte-string rules: '4m' is
+    4 MiB, so a one-file scan far below cores x 4 MiB fans out (a digit
+    strip read it as 4 bytes and silently skipped the fan-out), while
+    '1k' keeps the ~100 KB file at or above cores x openCost."""
+    from rusty_bloomfilter_spark.sources import fan_out_small_scan
+
+    path = str(tmp_path / "small")
+    spark.range(20_000).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    before = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", open_cost)
+    try:
+        out = fan_out_small_scan(spark, df, path=path)
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", before)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("RoundRobinPartitioning" in plan) == fans_out, plan

@@ -214,24 +214,6 @@ def test_cms_weighted_add():
     assert a.n_items == b.n_items == 6
 
 
-def test_direct_scan_build_equals_standard(spark, sequences_pdf, tmp_path):
-    """fastscan (pyarrow reads in workers) produces the bitwise-same
-    sketch as the standard JVM-scan pipeline."""
-    from rusty_bloomfilter_spark.operators.fastscan import build_sketch_direct
-    from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
-    from rusty_bloomfilter_spark.sketch import merge_sketch_payloads
-
-    path = str(tmp_path / "seq_direct")
-    spark.createDataFrame(sequences_pdf).repartition(5).write.parquet(path)
-
-    sk = BlockedBloomSketch.for_np(n=300_000, p=1e-3)
-    std_payload, std_n = sk.build_bytes(spark.read.parquet(path))
-    d_payload, d_n = build_sketch_direct(
-        spark, path, sk._empty, sk._update, merge_sketch_payloads, columns=["tokens"]
-    )
-    assert d_payload == std_payload and d_n == std_n
-
-
 def test_sql_sketch_aggregates(spark, seq_df, sequences_pdf):
     """Pure-SQL sketch aggregation: hll_agg/bloom_agg payloads are
     bitwise identical to the tree-merge builders (canonical bytes), and
@@ -522,3 +504,116 @@ def test_dedup_counts_declines_uint64():
     from rusty_bloomfilter_spark.operators.sketches import dedup_counts
 
     assert dedup_counts(np.arange(1 << 15, dtype=np.uint64) % 100) is None
+
+
+def test_every_build_merges_on_arrow_with_oracle_bytes(spark, seq_df, sequences_pdf, tmp_path, monkeypatch):
+    """Every build, checkpoint, shard and compaction path folds and
+    merges on Arrow — no MapInPandas / FlatMapGroupsInPandas node in
+    any plan — and each payload is byte-identical to a local oracle:
+    one accumulator of the same spec over all of the data, canonicalized
+    by the same merge."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from rusty_bloomfilter_spark.operators import build_multi, build_multi_by_key
+    from rusty_bloomfilter_spark.operators.checkpoint import build_with_checkpoint
+    from rusty_bloomfilter_spark.operators.pruning import bloom_file_index, compact_index
+    from rusty_bloomfilter_spark.operators.sharded import ShardedBloomSketch, shard_of
+    from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
+    from rusty_bloomfilter_spark.sketch import merge_payloads, merge_sketch_payloads
+
+    plans: list[str] = []
+    frame_type = type(seq_df)
+    collect = frame_type.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame_type, "collect", recording_collect)
+
+    def arrow_only():
+        assert plans
+        for plan in plans:
+            assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, plan
+        plans.clear()
+
+    def oracle(sk, pdf, merge=merge_sketch_payloads):
+        acc = sk._empty()
+        sk._update(acc, pa.RecordBatch.from_pandas(pdf, preserve_index=False))
+        return merge([acc.to_bytes()]), acc.n_items
+
+    blocked = BlockedBloomSketch.for_np(n=300_000, p=1e-3)
+    hll, cms = HllSketch(p=12), CmsSketch(4, 4096)
+    by_source = dict(list(sequences_pdf.groupby("source")))
+
+    # build_sketch, with a multi-level tree (fanout 2 over 5 partitions)
+    assert blocked.build_bytes(seq_df.repartition(5), fanout=2) == oracle(blocked, sequences_pdf)
+    arrow_only()
+
+    # build_by_key, without and with the (key, _salt) level
+    for salt in (0, 4):
+        rows = hll.build_by_key(seq_df, "source", salt=salt).collect()
+        assert {r["key"]: (bytes(r["payload"]), r["n_items"]) for r in rows} == {
+            k: oracle(hll, pdf) for k, pdf in by_source.items()
+        }
+        arrow_only()
+
+    # build_multi and build_multi_by_key (without and with salt)
+    specs = [(name, sk._empty, sk._update, merge_sketch_payloads) for name, sk in
+             (("bloom", blocked), ("hll", hll), ("cms", cms))]
+
+    def multi_of(row):
+        return {name: (bytes(row[f"payload_{name}"]), row[f"n_{name}"]) for name, *_ in specs}
+
+    def multi_oracle(pdf):
+        return {name: oracle(sk, pdf) for name, sk in (("bloom", blocked), ("hll", hll), ("cms", cms))}
+
+    (row,) = build_multi(seq_df.repartition(5), specs, columns=["tokens"], fanout=2).collect()
+    assert row["n_rows"] == len(sequences_pdf) and multi_of(row) == multi_oracle(sequences_pdf)
+    arrow_only()
+    for salt in (0, 3):
+        rows = build_multi_by_key(seq_df, "source", specs, columns=["source", "tokens"], salt=salt).collect()
+        assert {r["key"]: multi_of(r) for r in rows} == {k: multi_oracle(p) for k, p in by_source.items()}
+        arrow_only()
+
+    # the checkpoint merge: a cold build, then a resume of every file
+    src = str(tmp_path / "src")
+    seq_df.select("tokens").repartition(4).write.parquet(src)
+    for _ in range(2):
+        rep = build_with_checkpoint(
+            spark, src, str(tmp_path / "ckpt"), blocked._empty, blocked._update,
+            merge_sketch_payloads, columns=["tokens"], fanout=2,
+        )
+        assert (rep.payload, rep.n_items) == oracle(blocked, sequences_pdf)
+    assert rep.resumed_files == rep.total_files == 4
+    arrow_only()
+
+    # ShardedBloomSketch.build: per-shard filters over the routed hashes
+    sharded = ShardedBloomSketch(300_000, 1e-3, 4)
+    h = sharded._flat_hashes(pa.RecordBatch.from_pandas(sequences_pdf[["tokens"]], preserve_index=False))
+    shard = shard_of(h, 4)
+    want = {}
+    for s in range(4):
+        f = sharded._empty()
+        f.add_hashes(h[shard == s])
+        want[s] = (f.to_bytes(), f.n_items)
+    rows = sharded.build(seq_df).collect()
+    assert {r["shard"]: (bytes(r["payload"]), r["n_items"]) for r in rows} == want
+    arrow_only()
+
+    # compact_index over two snapshots of the same file index
+    keys = str(tmp_path / "keys")
+    spark.range(4000).select(F.col("id").alias("key")).repartition(3).write.parquet(keys)
+    shape = Shape.for_np(2000, 1e-3)
+    idx = bloom_file_index(spark.read.parquet(keys), shape, key_col="key")
+    rows = compact_index(idx, idx).collect()
+    key_sk = BloomSketch(shape, col="key", scalar=True)
+    for r in rows:
+        pdf = pq.read_table(r["file"].removeprefix("file:")).to_pandas()
+        payload, n = oracle(key_sk, pd.concat([pdf, pdf]), merge_payloads)
+        assert (bytes(r["payload"]), r["n_items"], r["n_rows"]) == (payload, n, 2 * len(pdf))
+    assert len(rows) == 3
+    arrow_only()
