@@ -1,30 +1,40 @@
 """Sketches as SQL aggregate/scalar functions.
 
-``register_sketch_sql(spark)`` makes the sketch library usable from
-pure SQL — every mergeable summary in the library has an agg/estimate
-pair: ``hll_agg``/``hll_estimate``, ``bloom_agg``/``bloom_estimate_n``,
-``cms_agg``/``cms_query``, ``kll_agg``/``kll_quantile``,
-``dd_agg``/``dd_quantile`` (DDSketch relative-error quantiles),
-``mg_agg``/``mg_candidates``, ``gram_agg``/``gram_eigvals``,
-``ams_agg``/``ams_f2``/``ams_query`` (unbiased signed frequencies +
-the F2 skew oracle), the deletable-membership pair
-``cbf_agg``/``cbf_subtract``, the exact-reconciliation pair
-``iblt_agg``/``iblt_diff`` (entry key+1 means only-in-a, -(key+1)
-only-in-b — shifted because key 0 has no sign), and ``sketch_merge`` — a GROUPED_AGG
-payload merge for ANY registry kind, so finest-grain sketch cells roll
-up to coarser groups in pure SQL without re-scanning the source:
+``register_sketch_sql(spark)`` registers 22 functions (optionally
+name-prefixed) in the session's SQL function registry, so every
+mergeable summary in the library is usable from pure SQL:
 
     SELECT source,
            hll_estimate(hll_agg(tokens))      AS distinct_est,
            bloom_estimate_n(bloom_agg(tokens)) AS distinct_est2
     FROM sequences GROUP BY source
 
-plus the deletable-membership pair: ``cbf_agg(key)`` (counting Bloom
-over a scalar int64 key) and ``cbf_subtract(corpus, revoked)``.
+Aggregates, each returning the canonical serialized payload:
+``hll_agg``, ``bloom_agg``, ``cms_agg``, ``ams_agg`` and ``mg_agg``
+over an array<int> token column; ``kll_agg`` and ``dd_agg`` (DDSketch
+relative-error quantiles) over a scalar numeric column; ``cbf_agg``
+(counting Bloom, deletable membership) and ``iblt_agg`` (invertible
+difference table, SET semantics) over a scalar int64 key; ``gram_agg``
+over an array<double> column of width ``gram_dim``; and
+``sketch_merge``, a payload merge for ANY registry kind, so
+finest-grain sketch cells roll up to coarser groups in pure SQL
+without re-scanning the source.
 
-The aggregates are Arrow-batched GROUPED_AGG pandas UDFs returning the
-canonical serialized payload (bitwise identical to the tree-merge
-builders — canonical bytes are a pure function of the inserted set).
+Scalar functions, NULL in -> NULL out: ``hll_estimate``,
+``bloom_estimate_n``, ``cms_query(payload, token)``,
+``kll_quantile(payload, q)``, ``dd_quantile(payload, q)``,
+``ams_f2`` and ``ams_query(payload, token)`` (unbiased signed
+frequencies + the F2 skew oracle), ``mg_candidates(payload,
+threshold)``, ``gram_eigvals``, ``cbf_subtract(corpus, revoked)`` and
+``iblt_diff(a, b)`` (entry key+1 means only-in-a, -(key+1) only-in-b —
+shifted because key 0 has no sign).
+
+All of them are Arrow UDFs: BIGINT arguments arrive as exact int64
+(NULLs are real nulls, never float64 NaN), and every ``*_agg`` except
+``iblt_agg`` runs the build spec of operators/sketches.py (its
+``_empty`` / ``_update``) over the group's non-NULL values — the same
+update the tree-merge builders fold, so canonical bytes are a pure
+function of the inserted set.
 
 Scale note: a GROUPED_AGG UDF materializes each group on one worker —
 there is NO partial aggregation, unlike the tree-merge pipeline
@@ -36,38 +46,37 @@ grouped-agg limitation.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from ..sketch import BloomFilter, HyperLogLog, Shape
-
-
-def _probe_int(t):
-    """Nullable per-row token -> exact python int or None.
-
-    An int64 token column WITH NULLS reaches a pandas UDF as float64
-    (Arrow->pandas promotion): the NULL rows arrive as NaN (never
-    ``None``) and must yield NULL, and |v| >= 2^53 floats have already
-    lost the original key — fail loudly rather than probe a rounded
-    value (same contract as operators.sketches._series_probe_values).
-    """
-    if t is None:
-        return None
-    if isinstance(t, float):
-        if math.isnan(t):
-            return None
-        if abs(t) >= 2.0**53:
-            raise ValueError(
-                "token column arrived as float64 (nullable-int64 promotion) "
-                "with |value| >= 2^53; the original integer key is "
-                "unrecoverable — filter NULLs out of the token column first"
-            )
-    return int(t)
-
+from ..operators.sketches import (
+    AmsSketch,
+    BloomSketch,
+    CmsSketch,
+    CountingBloomSketch,
+    DDQuantiles,
+    HllSketch,
+    KllQuantiles,
+    MgSketch,
+    _scalar_values,
+    as_batch,
+    rowwise_udf,
+)
+from ..operators.spectral import GramSketch
+from ..sketch import (
+    BloomFilter,
+    CountingBloomFilter,
+    CountSketch,
+    GramMatrix,
+    HyperLogLog,
+    MisraGries,
+    Shape,
+    merge_sketch_payloads,
+    sketch_from_bytes,
+)
+from ..sketch.iblt import IBLT
 
 _CACHE_CAP = 32  # distinct payloads per python worker before reset
 
@@ -79,12 +88,60 @@ def _cached_sketch(cache: dict, payload):
     key = bytes(payload)
     sk = cache.get(key)
     if sk is None:
-        from ..sketch import sketch_from_bytes
-
         if len(cache) >= _CACHE_CAP:
             cache.clear()
         sk = cache[key] = sketch_from_bytes(key)
     return sk
+
+
+def _spec_agg(spec):
+    """GROUPED_AGG Arrow UDF of one build spec (its ``col`` is "v"):
+    the group's non-NULL values as one batch through the spec's own
+    ``_empty`` / ``_update`` -> payload bytes."""
+
+    def agg(values: pa.Array) -> bytes:
+        acc = spec._empty()
+        values = values.drop_null()
+        if len(values):
+            spec._update(acc, as_batch(values))
+        return acc.to_bytes()
+
+    return arrow_udf(agg, "binary")
+
+
+def _query_token(cache: dict):
+    # estimated count of one token per row; payloads deserialize once
+    # per distinct bytes, not per row
+    return lambda p, t: int(
+        _cached_sketch(cache, p).query_tokens(np.asarray([int(t)], np.int64))[0]
+    )
+
+
+def _iblt_diff(a: bytes, b: bytes) -> list[int]:
+    # exact two-sided diff of two iblt_agg payloads: entry (key + 1)
+    # means key only in a, -(key + 1) only in b; keys must be
+    # < 2^62 - 1 (md5-60-bit and id keys are). Raises on decode
+    # failure, never truncates.
+    add, rem, ok = IBLT.from_bytes(a).subtract(IBLT.from_bytes(b)).peel()
+    if not ok:
+        raise ValueError(
+            "iblt_diff: decode incomplete — difference exceeds the "
+            "table's max_diff; rebuild iblt_agg with a larger bound"
+        )
+    hi = max(int(add.max()) if add.size else 0, int(rem.max()) if rem.size else 0)
+    if hi >= 2**62 - 1:
+        raise ValueError("iblt_diff: key >= 2^62-1 breaks the sign encoding")
+    return sorted(int(x) + 1 for x in add.astype(np.int64)) + sorted(
+        -(int(x) + 1) for x in rem.astype(np.int64)
+    )
+
+
+def _cbf_subtract(a: bytes, b: bytes) -> bytes:
+    # filter-level revocation: corpus payload minus revoke payload
+    # (sticky-saturation contract, sketch/counting.py)
+    f = CountingBloomFilter.from_bytes(a)
+    f.subtract_in_place(CountingBloomFilter.from_bytes(b))
+    return f.to_bytes()
 
 
 def register_sketch_sql(
@@ -104,345 +161,76 @@ def register_sketch_sql(
     iblt_max_diff: int = 4096,
     prefix: str = "",
 ) -> None:
-    """Register hll_agg / hll_estimate / bloom_agg / bloom_estimate_n
-    (optionally name-prefixed) in the session's SQL function registry."""
+    """Register the 22 sketch SQL functions of the module docstring,
+    each name prefixed by ``prefix``; the keyword arguments size the
+    sketches the ``*_agg`` functions build."""
     shape = Shape.for_np(n=bloom_n, p=bloom_p)
 
-    @pandas_udf("binary")
-    def hll_agg(tokens: pd.Series) -> bytes:
-        hll = HyperLogLog(hll_p)
-        arrs = [np.asarray(a, dtype=np.int64) for a in tokens if a is not None and len(a)]
-        if arrs:
-            hll.add_tokens(np.concatenate(arrs))
-        return hll.to_bytes()
-
-    @pandas_udf("double")
-    def hll_estimate(payload: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                float("nan") if p is None else HyperLogLog.from_bytes(bytes(p)).estimate()
-                for p in payload
-            ]
-        )
-
-    @pandas_udf("binary")
-    def bloom_agg(tokens: pd.Series) -> bytes:
-        from ..sketch import SparseBloomBuilder
-
-        bf = SparseBloomBuilder(shape)
-        arrs = [np.asarray(a, dtype=np.int64) for a in tokens if a is not None and len(a)]
-        if arrs:
-            bf.add_tokens(np.concatenate(arrs))
-        return bf.to_bytes()
-
-    @pandas_udf("double")
-    def bloom_estimate_n(payload: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                float("nan") if p is None else BloomFilter.from_bytes(bytes(p)).estimate_n()
-                for p in payload
-            ]
-        )
-
-    @pandas_udf("binary")
-    def cbf_agg(keys: pd.Series) -> bytes:
-        # counting Bloom over a SCALAR int64 key column (doc ids) —
-        # multiplicity IS the counter state, so no dedup fold
-        from ..sketch import CountingBloomFilter
-
-        cbf = CountingBloomFilter.empty(shape)
-        vals = keys.dropna().to_numpy()
-        if vals.dtype.kind == "f":
-            # int64-with-NULLs arrives as float64 (Arrow->pandas
-            # promotion); floats are exact only below 2^53 — beyond
-            # that the original key is unrecoverable, so fail loudly
-            # instead of silently inserting a rounded key (which would
-            # make the true key probe False: a false negative).
-            if vals.size and np.abs(vals).max() >= 2.0**53:
-                raise ValueError(
-                    "cbf_agg: nullable int64 keys arrive as float64 and "
-                    "|key| >= 2^53 cannot be recovered exactly; filter "
-                    "NULLs out first (WHERE key IS NOT NULL)"
-                )
-            vals = vals.astype(np.int64)
-        else:
-            vals = vals.astype(np.int64, copy=False)
-        if vals.size:
-            cbf.add_tokens(vals)
-        return cbf.to_bytes()
-
-    @pandas_udf("binary")
-    def iblt_agg(keys: pd.Series) -> bytes:
-        # invertible difference table over a scalar int64 key column;
-        # SET semantics — duplicate keys within the group XOR-cancel,
-        # so feed DISTINCT keys (sketch/iblt.py docstring)
-        from ..sketch.iblt import IBLT
-
+    @arrow_udf("binary")
+    def iblt_agg(keys: pa.Array) -> bytes:
+        # SET semantics — duplicate keys within the group would
+        # XOR-cancel, so the group's keys are made distinct first
         t = IBLT.for_diff(iblt_max_diff)
-        vals = keys.dropna().to_numpy()
-        if vals.dtype.kind == "f":
-            if vals.size and np.abs(vals).max() >= 2.0**53:
-                raise ValueError(
-                    "iblt_agg: nullable int64 keys arrive as float64 and "
-                    "|key| >= 2^53 cannot be recovered exactly; filter "
-                    "NULLs out first (WHERE key IS NOT NULL)"
-                )
-            vals = vals.astype(np.int64)
+        vals = _scalar_values(as_batch(keys.drop_null()), "v")
         if vals.size:
-            t.add_u64(np.unique(vals.astype(np.int64)).astype(np.uint64))
+            t.add_u64(np.unique(vals).astype(np.uint64))
         return t.to_bytes()
 
-    @pandas_udf("array<bigint>")
-    def iblt_diff(a: pd.Series, b: pd.Series) -> pd.Series:
-        # exact two-sided diff of two iblt_agg payloads: entry
-        # (key + 1) means key only in a, -(key + 1) only in b — the
-        # +1 shift because key 0 has no sign (-0 == 0); keys must be
-        # < 2^62 - 1 (md5-60-bit and id keys are). Raises on decode
-        # failure, never truncates.
-        from ..sketch.iblt import IBLT
-
-        out = []
-        for pa_, pb in zip(a, b):
-            if pa_ is None or pb is None:
-                out.append(None)
-                continue
-            d = IBLT.from_bytes(bytes(pa_)).subtract(IBLT.from_bytes(bytes(pb)))
-            add, rem, ok = d.peel()
-            if not ok:
-                raise ValueError(
-                    "iblt_diff: decode incomplete — difference exceeds the "
-                    "table's max_diff; rebuild iblt_agg with a larger bound"
-                )
-            hi = max(int(add.max()) if add.size else 0, int(rem.max()) if rem.size else 0)
-            if hi >= 2**62 - 1:
-                raise ValueError("iblt_diff: key >= 2^62-1 breaks the sign encoding")
-            out.append(
-                sorted(int(x) + 1 for x in add.astype(np.int64))
-                + sorted(-(int(x) + 1) for x in rem.astype(np.int64))
-            )
-        return pd.Series(out)
-
-    @pandas_udf("binary")
-    def cbf_subtract(a: pd.Series, b: pd.Series) -> pd.Series:
-        # filter-level revocation: corpus payload minus revoke payload
-        # (sticky-saturation contract, sketch/counting.py)
-        from ..sketch import CountingBloomFilter
-
-        out = []
-        for pa_, pb in zip(a, b):
-            if pa_ is None or pb is None:
-                out.append(None)
-                continue
-            f = CountingBloomFilter.from_bytes(bytes(pa_))
-            f.subtract_in_place(CountingBloomFilter.from_bytes(bytes(pb)))
-            out.append(f.to_bytes())
-        return pd.Series(out)
-
-    @pandas_udf("binary")
-    def cms_agg(tokens: pd.Series) -> bytes:
-        # Count-Min frequency sketch over an array<int> column
-        from ..sketch import CountMinSketch
-
-        cms = CountMinSketch(d=cms_d, w=cms_w)
-        arrs = [np.asarray(a, dtype=np.int64) for a in tokens if a is not None and len(a)]
-        if arrs:
-            cms.add_tokens(np.concatenate(arrs))
-        return cms.to_bytes()
-
-    cms_cache: dict = {}
-
-    @pandas_udf("bigint")
-    def cms_query(payload: pd.Series, token: pd.Series) -> pd.Series:
-        # estimated count of one token per row (>= true count;
-        # overshoot <= eps*N with prob 1-delta). NULL token -> NULL;
-        # payloads deserialize once per distinct bytes, not per row.
-        out = []
-        for p, t in zip(payload, token):
-            # payload check FIRST: a NULL-payload row answers NULL no
-            # matter the token — the >=2^53 guard must not fire for it
-            tok = None if p is None else _probe_int(t)
-            if p is None or tok is None:
-                out.append(None)
-                continue
-            cms = _cached_sketch(cms_cache, p)
-            out.append(int(cms.query_tokens(np.asarray([tok], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf("binary")
-    def kll_agg(values: pd.Series) -> bytes:
-        # KLL quantile sketch over a SCALAR numeric column
-        from ..sketch import KLLSketch
-
-        kll = KLLSketch(k=kll_k)
-        vals = values.dropna().to_numpy(dtype=np.float64)
-        if vals.size:
-            kll.update_batch(vals)
-        return kll.to_bytes()
-
-    kll_cache: dict = {}
-
-    @pandas_udf("double")
-    def kll_quantile(payload: pd.Series, q: pd.Series) -> pd.Series:
-        out = []
-        for p, qq in zip(payload, q):
-            # a NULL q arrives as NaN (double promotion): must yield
-            # NULL, not quantile(nan) == the sketched max
-            if p is None or qq is None or (isinstance(qq, float) and math.isnan(qq)):
-                out.append(None)
-                continue
-            out.append(float(_cached_sketch(kll_cache, p).quantile(float(qq))))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf("binary")
-    def dd_agg(values: pd.Series) -> bytes:
-        # DDSketch RELATIVE-error quantile sketch over a scalar numeric
-        # column; canonical bytes under any partitioning (unlike KLL)
-        from ..sketch import DDSketch
-
-        dd = DDSketch(dd_alpha)
-        vals = values.dropna().to_numpy(dtype=np.float64)
-        if vals.size:
-            dd.add(vals)
-        return dd.to_bytes()
-
-    dd_cache: dict = {}
-
-    @pandas_udf("double")
-    def dd_quantile(payload: pd.Series, q: pd.Series) -> pd.Series:
-        out = []
-        for p, qq in zip(payload, q):
-            if p is None or qq is None or (isinstance(qq, float) and math.isnan(qq)):
-                out.append(None)
-                continue
-            sk = _cached_sketch(dd_cache, p)
-            out.append(None if sk.n_items == 0 else float(sk.quantile(float(qq))))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf("binary")
-    def ams_agg(tokens: pd.Series) -> bytes:
-        # count sketch (AMS) over an array<int> column: unbiased signed
-        # frequencies + the F2 second-moment skew oracle
-        from ..sketch import CountSketch
-
-        cs = CountSketch(d=ams_d, w=ams_w)
-        arrs = [np.asarray(a, dtype=np.int64) for a in tokens if a is not None and len(a)]
-        if arrs:
-            cs.add_tokens(np.concatenate(arrs))
-        return cs.to_bytes()
-
-    @pandas_udf("bigint")
-    def ams_f2(payload: pd.Series) -> pd.Series:
-        # second frequency moment estimate (per-row rel-std sqrt(2/w))
-        from ..sketch import CountSketch
-
-        out = []
-        for p in payload:
-            out.append(None if p is None else int(CountSketch.from_bytes(bytes(p)).f2()))
-        return pd.Series(out, dtype="object")
-
-    ams_cache: dict = {}
-
-    @pandas_udf("bigint")
-    def ams_query(payload: pd.Series, token: pd.Series) -> pd.Series:
-        # unbiased two-sided frequency estimate of one token per row
-        out = []
-        for p, t in zip(payload, token):
-            tok = None if p is None else _probe_int(t)  # payload first
-            if p is None or tok is None:
-                out.append(None)
-                continue
-            cs = _cached_sketch(ams_cache, p)
-            out.append(int(cs.query_tokens(np.asarray([tok], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf("binary")
-    def sketch_merge(payloads: pd.Series) -> bytes:
-        # GROUPED_AGG payload merge, any registry kind (magic
-        # dispatch): rolls finest-grain sketch cells up to coarser
-        # groups in pure SQL without re-scanning the source —
-        # SELECT source, hll_estimate(sketch_merge(payload))
-        # FROM cells GROUP BY source
-        from ..sketch import merge_sketch_payloads
-
-        present = [bytes(p) for p in payloads if p is not None]
+    @arrow_udf("binary")
+    def sketch_merge(payloads: pa.Array) -> bytes | None:
         # SQL aggregate semantics: a group with no non-NULL payloads
         # yields NULL, never a task-crashing ValueError
+        present = payloads.drop_null().to_pylist()
         return merge_sketch_payloads(present) if present else None
 
-    @pandas_udf("binary")
-    def mg_agg(tokens: pd.Series) -> bytes:
-        # Misra-Gries heavy-hitter summary over an array<int> column
-        from ..sketch import MisraGries
+    cms_cache: dict = {}
+    ams_cache: dict = {}
+    kll_cache: dict = {}
+    dd_cache: dict = {}
 
-        mg = MisraGries(capacity=mg_capacity)
-        arrs = [np.asarray(a, dtype=np.int64) for a in tokens if a is not None and len(a)]
-        if arrs:
-            mg.add_tokens(np.concatenate(arrs))
-        return mg.to_bytes()
+    def dd_quantile(p: bytes, q: float) -> float | None:
+        sk = _cached_sketch(dd_cache, p)
+        return None if sk.n_items == 0 else float(sk.quantile(float(q)))
 
-    @pandas_udf("array<bigint>")
-    def mg_candidates(payload: pd.Series, threshold: pd.Series) -> pd.Series:
+    functions = {
+        "hll_agg": _spec_agg(HllSketch(hll_p, col="v")),
+        "hll_estimate": rowwise_udf("double", lambda p: HyperLogLog.from_bytes(p).estimate()),
+        "bloom_agg": _spec_agg(BloomSketch(shape, col="v")),
+        "bloom_estimate_n": rowwise_udf(
+            "double", lambda p: BloomFilter.from_bytes(p).estimate_n()
+        ),
+        "cbf_agg": _spec_agg(CountingBloomSketch(shape, col="v")),
+        "cbf_subtract": rowwise_udf("binary", _cbf_subtract),
+        "iblt_agg": iblt_agg,
+        "iblt_diff": rowwise_udf("array<bigint>", _iblt_diff),
+        "cms_agg": _spec_agg(CmsSketch(cms_d, cms_w, col="v")),
+        # >= true count; overshoot <= eps*N with prob 1-delta
+        "cms_query": rowwise_udf("bigint", _query_token(cms_cache)),
+        "kll_agg": _spec_agg(KllQuantiles(kll_k, col="v")),
+        "kll_quantile": rowwise_udf(
+            "double", lambda p, q: float(_cached_sketch(kll_cache, p).quantile(float(q)))
+        ),
+        "dd_agg": _spec_agg(DDQuantiles(dd_alpha, col="v")),
+        "dd_quantile": rowwise_udf("double", dd_quantile),
+        "sketch_merge": sketch_merge,
+        "ams_agg": _spec_agg(AmsSketch(ams_d, ams_w, col="v")),
+        # second frequency moment estimate (per-row rel-std sqrt(2/w))
+        "ams_f2": rowwise_udf("bigint", lambda p: int(CountSketch.from_bytes(p).f2())),
+        # unbiased two-sided frequency estimate of one token per row
+        "ams_query": rowwise_udf("bigint", _query_token(ams_cache)),
+        "mg_agg": _spec_agg(MgSketch(mg_capacity, col="v")),
         # tokens possibly above the per-row threshold (guaranteed
         # superset when threshold >= n_items/(capacity+1))
-        from ..sketch import MisraGries
-
-        out = []
-        for p, t in zip(payload, threshold):
-            thr = _probe_int(t)  # nullable-int promotion guard
-            if p is None or thr is None:
-                out.append(None)
-                continue
-            mg = MisraGries.from_bytes(bytes(p))
-            out.append([int(v) for v in mg.candidates_above(thr).view(np.int64)])
-        return pd.Series(out)
-
-    @pandas_udf("binary")
-    def gram_agg(vecs: pd.Series) -> bytes:
-        # exact Gram over an array<float> column (fixed width gram_dim;
-        # NULL / wrong-width rows skipped, same contract as the
-        # spectral operators)
-        from ..sketch import GramMatrix
-
-        g = GramMatrix(gram_dim)
-        rows = [
-            np.asarray(v, dtype=np.float64)
-            for v in vecs
-            if v is not None and len(v) == gram_dim
-        ]
-        if rows:
-            g.add_rows(np.stack(rows))
-        return g.to_bytes()
-
-    @pandas_udf("array<double>")
-    def gram_eigvals(payload: pd.Series) -> pd.Series:
-        from ..sketch import GramMatrix
-
-        return pd.Series(
-            [
-                None if p is None else [float(x) for x in GramMatrix.from_bytes(bytes(p)).eigh()[0]]
-                for p in payload
-            ]
-        )
-
-    spark.udf.register(prefix + "hll_agg", hll_agg)
-    spark.udf.register(prefix + "hll_estimate", hll_estimate)
-    spark.udf.register(prefix + "bloom_agg", bloom_agg)
-    spark.udf.register(prefix + "bloom_estimate_n", bloom_estimate_n)
-    spark.udf.register(prefix + "cbf_agg", cbf_agg)
-    spark.udf.register(prefix + "cbf_subtract", cbf_subtract)
-    spark.udf.register(prefix + "iblt_agg", iblt_agg)
-    spark.udf.register(prefix + "iblt_diff", iblt_diff)
-    spark.udf.register(prefix + "cms_agg", cms_agg)
-    spark.udf.register(prefix + "cms_query", cms_query)
-    spark.udf.register(prefix + "kll_agg", kll_agg)
-    spark.udf.register(prefix + "kll_quantile", kll_quantile)
-    spark.udf.register(prefix + "dd_agg", dd_agg)
-    spark.udf.register(prefix + "dd_quantile", dd_quantile)
-    spark.udf.register(prefix + "sketch_merge", sketch_merge)
-    spark.udf.register(prefix + "ams_agg", ams_agg)
-    spark.udf.register(prefix + "ams_f2", ams_f2)
-    spark.udf.register(prefix + "ams_query", ams_query)
-    spark.udf.register(prefix + "mg_agg", mg_agg)
-    spark.udf.register(prefix + "mg_candidates", mg_candidates)
-    spark.udf.register(prefix + "gram_agg", gram_agg)
-    spark.udf.register(prefix + "gram_eigvals", gram_eigvals)
+        "mg_candidates": rowwise_udf(
+            "array<bigint>",
+            lambda p, t: MisraGries.from_bytes(p).candidates_above(int(t)).view(np.int64).tolist(),
+        ),
+        # exact Gram (NULL / wrong-width rows skipped, same contract as
+        # the spectral operators)
+        "gram_agg": _spec_agg(GramSketch(gram_dim, vec_col="v")),
+        "gram_eigvals": rowwise_udf(
+            "array<double>", lambda p: GramMatrix.from_bytes(p).eigh()[0].tolist()
+        ),
+    }
+    for name, fn in functions.items():
+        spark.udf.register(prefix + name, fn)

@@ -33,6 +33,7 @@ from typing import Any
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SKETCH_SCHEMA = "payload binary, n_items bigint"
 KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
@@ -132,12 +133,13 @@ def iter_key_slices(batch: pa.RecordBatch, key_col: str):
 
 @dataclass(frozen=True)
 class SketchRows:
-    """Column layout of a sketch-row frame (DDL ``schema``): payload
-    columns with their merge fn and identity (a ``() -> bytes`` for the
-    empty sketch, or None), counter columns that sum, and key columns
-    passed through. Merged rows keep the schema."""
+    """Column layout of a sketch-row frame (``schema``, DDL or a
+    StructType): payload columns with their merge fn and identity (a
+    ``() -> bytes`` for the empty sketch, or None), counter columns
+    that sum, and key columns passed through. Merged rows keep the
+    schema."""
 
-    schema: str
+    schema: str | StructType
     payloads: tuple[tuple[str, MergePayloadsFn, Callable[[], bytes] | None], ...]
     sums: tuple[str, ...] = ("n_items",)
     keys: tuple[str, ...] = ()
@@ -242,7 +244,10 @@ def _merge_rows(
     out = dict(firsts)
     out.update((c, pa.array([v], type=pa.binary())) for c, v in payloads.items())
     out.update((c, pa.array([v], type=pa.int64())) for c, v in sums.items())
-    names = [field.split()[0] for field in rows.schema.split(",")]
+    if isinstance(rows.schema, StructType):
+        names = rows.schema.fieldNames()
+    else:
+        names = [field.split()[0] for field in rows.schema.split(",")]
     return pa.RecordBatch.from_arrays([out[n] for n in names], names=names)
 
 
@@ -251,8 +256,9 @@ def merge_level(
 ) -> DataFrame:
     """THE merge level: one merged row per partition (``by=None``:
     mapInArrow) or per group (groupBy(*by).applyInArrow, streamed as
-    record batches). Grouping columns outside the layout, such as
-    ``_salt``, are dropped."""
+    record batches; ``by=[]`` is one group of every row, the grand
+    total). Grouping columns outside the layout, such as ``_salt``,
+    are dropped."""
 
     def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         out = _merge_rows(rows, batches, final)

@@ -59,14 +59,10 @@ def bloom_anti_join(
     sk = BlockedBloomSketch.for_np(n=max(int(n), 1024), p=p, col="k", scalar=True)
     payload, _ = sk.build_bytes(build_keys)
 
-    # coalesce BEFORE the UDF: the disjunction below cannot be split
-    # around a Python UDF, so NULL rows still reach it — a nullable
-    # int64 key would arrive float64-promoted and |v| >= 2^53 keys
-    # (xxhash64 fingerprints) would crash the probe (round-4 review).
-    # NULL rows' probe result is irrelevant (key_null keeps them).
-    pred = broadcast_probe_udf(payload, probe.sparkSession)(
-        F.coalesce(F.col(probe_key), F.lit(0))
-    )
+    # the disjunction below cannot be split around a Python UDF, so
+    # NULL rows still reach it; they probe as key 0 and the result is
+    # irrelevant (key_null keeps them)
+    pred = broadcast_probe_udf(payload, probe.sparkSession)(F.col(probe_key))
     key_null = F.col(probe_key).isNull()
     certain = probe.filter(key_null | ~pred)  # definitely unmatched: keep
     candidates = probe.filter(~key_null & pred)  # true matches + FP <= p
@@ -129,15 +125,11 @@ def bloom_inner_join(
     spark = left.sparkSession
 
     def _pruned(df: DataFrame, key: str, payload: bytes) -> DataFrame:
-        # coalesce before the UDF: NULL rows may reach it regardless of
-        # the conjunction (UDF filters don't split reliably) and a
-        # float64-promoted |v| >= 2^53 key crashes the probe; NULL rows
-        # are dropped by isNotNull either way
+        # NULL rows may reach the UDF regardless of the conjunction (UDF
+        # filters don't split reliably); they probe as key 0 and are
+        # dropped by isNotNull either way
         return df.filter(
-            F.col(key).isNotNull()
-            & broadcast_probe_udf(payload, spark)(
-                F.coalesce(F.col(key), F.lit(0))
-            )
+            F.col(key).isNotNull() & broadcast_probe_udf(payload, spark)(F.col(key))
         )
 
     # both filters are built from the ORIGINAL sides: building the left

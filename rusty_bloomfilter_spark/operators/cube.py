@@ -23,37 +23,18 @@ cube cell).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from .sketches import HllSketch, merge_payloads_agg_udf
+from ..sketch import merge_sketch_payloads, sketch_from_bytes
+from .aggregate import SketchRows, merge_level
+from .sketches import HllSketch, rowwise_udf
 
 # unit separator: cannot appear in real dim values (control char); a
 # NULL dim value is encoded distinctly from the string "NULL"
 _SEP = "\x1f"
 _NULL = "\x00"
-
-
-def _sum_agg_udf():
-    # Spark disallows mixing a grouped-agg pandas UDF with built-in
-    # aggregates in one agg() — so the n_items sum rides the same
-    # pandas path as the payload merge
-    @F.pandas_udf("bigint")
-    def n_sum_agg(s: pd.Series) -> int:
-        return int(s.sum())
-
-    return n_sum_agg
-
-
-def _estimate_udf():
-    @F.pandas_udf("double")
-    def estimate(s: pd.Series) -> pd.Series:
-        from ..sketch import sketch_from_bytes
-
-        return pd.Series([float(sketch_from_bytes(bytes(x)).estimate()) for x in s])
-
-    return estimate
 
 
 def sketch_rollup(
@@ -66,24 +47,33 @@ def sketch_rollup(
     """Finest-grain sketch cells -> every ROLLUP level, by payload
     merge. Level L groups on dims[:L]; rolled-up dims are NULL (like
     SQL ROLLUP), ``level`` disambiguates a real NULL dim value from a
-    rolled-up one. Each level is one hash aggregate over the
-    cell-count-sized frame — the corpus is never re-read."""
+    rolled-up one. Each level is one keyed merge level (payloads
+    merged, ``n_col`` summed) over the cell-count-sized frame — the
+    corpus is never re-read. Cells with a NULL payload are skipped."""
     for d in dims:
         if d not in cells.columns:
             raise ValueError(f"dim column {d!r} not in cells frame")
-    merge = merge_payloads_agg_udf()
-    n_sum = _sum_agg_udf()
+    present = cells.where(F.col(payload_col).isNotNull())
     levels = []
     for lvl in range(len(dims), -1, -1):
+        keys = dims[:lvl]
+        rows = SketchRows(
+            StructType(
+                [cells.schema[d] for d in keys]
+                + [StructField(payload_col, BinaryType()), StructField(n_col, LongType())]
+            ),
+            ((payload_col, merge_sketch_payloads, None),),
+            sums=(n_col,),
+            keys=tuple(keys),
+        )
         # the finest level groups too (not a pass-through): a cells
         # frame holding >1 row per dim combination (e.g. per-partition
         # sketches that were never key-merged) must merge at EVERY
         # level, or the finest level would emit fragments while
-        # subtotals are whole — an internally inconsistent cube
-        agg = cells.groupBy(*dims[:lvl]).agg(
-            merge(F.col(payload_col)).alias(payload_col),
-            n_sum(F.col(n_col)).alias(n_col),
-        )
+        # subtotals are whole — an internally inconsistent cube. The
+        # merge level also sums n_col: an Arrow GROUPED_AGG merge could
+        # not share one agg() with a built-in sum.
+        agg = merge_level(present.select(*keys, payload_col, n_col), rows, by=keys)
         for d in dims[lvl:]:
             agg = agg.withColumn(d, F.lit(None).cast("string"))
         levels.append(agg.select(*dims, F.lit(lvl).alias("level"), payload_col, n_col))
@@ -127,7 +117,7 @@ def hll_rollup(
             F.when(parts.getItem(i) == _NULL, F.lit(None)).otherwise(parts.getItem(i)),
         )
     rolled = sketch_rollup(cells.select(*dims, "payload", "n_items"), dims)
-    est = _estimate_udf()
+    est = rowwise_udf("double", lambda p: float(sketch_from_bytes(p).estimate()))
     return rolled.select(
         *dims, "level", "n_items", est(F.col("payload")).alias("est_distinct"), "payload"
     )

@@ -653,6 +653,10 @@ def decode_jpeg(payload: bytes, *, allow_large: bool = False) -> np.ndarray:
                     bits = list(body[i + 1 : i + 17])
                     n = sum(bits)
                     vals = list(body[i + 17 : i + 17 + n])
+                    # a DC symbol is a magnitude category; > 16 would
+                    # overrun the decode loop's 24-bit accumulator
+                    if cls == 0 and vals and max(vals) > 16:
+                        raise ValueError("corrupt JPEG: DC category > 16")
                     (huff_dc if cls == 0 else huff_ac)[tid] = _HuffDecoder(bits, vals)
                     i += 17 + n
             elif marker == 0xC0:  # SOF0 baseline

@@ -46,6 +46,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,6 +75,17 @@ def _add_counted_hashes(acc: BlockedBloomFilter, batch) -> None:
     h = batch.column("h").to_numpy(zero_copy_only=False).view(np.uint64)
     acc.add_hashes(h)
     acc.n_items += int(batch.column("cnt").to_numpy(zero_copy_only=False).sum()) - len(h)
+
+
+def _shard_filter(sketch: pa.Table):
+    """A shard's filter from its sketch rows, or None when the build
+    never saw the shard (nothing was inserted). A unioned-but-not-yet-
+    remerged sketch frame has several rows per shard: they are merged
+    here rather than silently probing one (a false-negative hole)."""
+    payloads = sketch.column("payload").to_pylist()
+    if not payloads:
+        return None
+    return sketch_from_bytes(payloads[0] if len(payloads) == 1 else merge_sketch_payloads(payloads))
 
 
 def shard_of(hashes: np.ndarray, n_shards: int) -> np.ndarray:
@@ -152,9 +164,7 @@ class ShardedBloomSketch:
         make_empty = self._empty
         flat_hashes = self._flat_hashes
 
-        def build_partition(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
+        def build_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             accs: dict[int, BlockedBloomFilter] = {}
             for batch in batches:
                 h = flat_hashes(batch)
@@ -199,9 +209,7 @@ class ShardedBloomSketch:
         n_shards = self.n_shards
         flat_hashes = self._flat_hashes
 
-        def rows(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
+        def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 h = flat_hashes(batch)
                 if not h.size:
@@ -252,33 +260,19 @@ class ShardedBloomSketch:
         by one shard regardless of the total filter size."""
         probes = self._hash_rows(df)
 
-        def probe_shard(key, probe_pdf, sketch_pdf):
-            import pandas as pd
-
-            total = int(len(probe_pdf))
-            if total == 0:
-                return pd.DataFrame({"shard": [int(key[0])], "hits": [0], "total": [0]})
-            if len(sketch_pdf) == 0:
-                # no filter for this shard: nothing was ever inserted
-                return pd.DataFrame({"shard": [int(key[0])], "hits": [0], "total": [total]})
-            # a unioned-but-not-yet-remerged sketch frame has multiple
-            # rows per shard: merge them here rather than silently
-            # probing one (which would be a false-negative hole)
-            if len(sketch_pdf) > 1:
-                from ..sketch import merge_sketch_payloads
-
-                payload = merge_sketch_payloads([bytes(p) for p in sketch_pdf["payload"]])
-            else:
-                payload = bytes(sketch_pdf["payload"].iloc[0])
-            bf = sketch_from_bytes(payload)
-            h = probe_pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            hits = int(bf.contains_hashes(h).sum())
-            return pd.DataFrame({"shard": [int(key[0])], "hits": [hits], "total": [total]})
+        def probe_shard(hashes: pa.Table, sketch: pa.Table) -> pa.Table:
+            hits, total = 0, hashes.num_rows
+            bf = _shard_filter(sketch) if total else None
+            if bf is not None:
+                hits = int(bf.contains_hashes(hashes.column("h").to_numpy().view(np.uint64)).sum())
+            return pa.table(
+                {"hits": pa.array([hits], pa.int64()), "total": pa.array([total], pa.int64())}
+            )
 
         out = (
             probes.groupBy("shard")
             .cogroup(sketch_df.select("shard", "payload").groupBy("shard"))
-            .applyInPandas(probe_shard, "shard int, hits bigint, total bigint")
+            .applyInArrow(probe_shard, "hits bigint, total bigint")
             .agg(F.sum("hits").alias("hits"), F.sum("total").alias("total"))
             .collect()[0]
         )
@@ -298,9 +292,7 @@ class ShardedBloomSketch:
         n_shards = self.n_shards
         col = self.col
 
-        def hash_rows(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
+        def hash_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             from .sketches import _scalar_values
 
             for batch in batches:
@@ -330,28 +322,18 @@ class ShardedBloomSketch:
             hash_rows, schema="shard int, h bigint, rid bigint"
         )
 
-        def probe_shard(key, probe_pdf, sketch_pdf):
-            import pandas as pd
-
-            if len(probe_pdf) == 0:
-                return pd.DataFrame({"rid": [], "probably_seen": []})
-            rid = probe_pdf["rid"].to_numpy(dtype=np.int64)
-            if len(sketch_pdf) == 0:
-                return pd.DataFrame({"rid": rid, "probably_seen": np.zeros(len(rid), bool)})
-            if len(sketch_pdf) > 1:
-                from ..sketch import merge_sketch_payloads
-
-                payload = merge_sketch_payloads([bytes(p) for p in sketch_pdf["payload"]])
+        def probe_shard(hashes: pa.Table, sketch: pa.Table) -> pa.Table:
+            bf = _shard_filter(sketch) if hashes.num_rows else None
+            if bf is None:
+                seen = np.zeros(hashes.num_rows, bool)
             else:
-                payload = bytes(sketch_pdf["payload"].iloc[0])
-            bf = sketch_from_bytes(payload)
-            h = probe_pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            return pd.DataFrame({"rid": rid, "probably_seen": bf.contains_hashes(h)})
+                seen = bf.contains_hashes(hashes.column("h").to_numpy().view(np.uint64))
+            return pa.table({"rid": hashes.column("rid"), "probably_seen": pa.array(seen)})
 
         out = (
             probes.groupBy("shard")
             .cogroup(sketch_df.select("shard", "payload").groupBy("shard"))
-            .applyInPandas(probe_shard, "rid bigint, probably_seen boolean")
+            .applyInArrow(probe_shard, "rid bigint, probably_seen boolean")
         )
         return out.select(F.col("rid").alias(id_col), "probably_seen")
 
@@ -361,9 +343,7 @@ class ShardedBloomSketch:
         """Per-shard (shard, n_items, fill_ratio, bytes) — the
         north-rule sketch-size/fill metrics, one narrow row per shard."""
 
-        def per_shard(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
+        def per_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 shards = batch.column("shard").to_pylist()
                 payloads = batch.column("payload").to_pylist()

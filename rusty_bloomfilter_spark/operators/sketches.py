@@ -11,10 +11,14 @@ batches — ragged ``tokens`` arrays are flattened with offsets in C
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from ..sketch import (
     BlockedBloomFilter,
@@ -48,39 +52,25 @@ def flatten_tokens(series: pd.Series) -> np.ndarray:
     return np.concatenate(vals).astype(np.int64, copy=False)
 
 
-def _list_column(batch: "pa.RecordBatch", col: str):
-    import pyarrow as pa  # local so pandas-only callers need no arrow
-
+def _list_column(batch: pa.RecordBatch, col: str):
     arr = batch.column(col)
     if isinstance(arr, pa.ChunkedArray):  # defensive; RecordBatch gives Array
         arr = arr.combine_chunks()
     return arr
 
 
-def merge_payloads_agg_udf():
-    """GROUPED_AGG pandas UDF factory: fold a binary payload column
-    through sketch.merge_sketch_payloads (any registry kind, magic
-    dispatch). NULL payloads are skipped; an all-NULL group yields
-    NULL, never a task-crashing ValueError (SQL aggregate semantics).
-    The single canonical definition — cube.py / sliding.py / SQL
-    sketch_merge must not grow divergent copies (round-4 review)."""
-
-    @F.pandas_udf("binary")
-    def merge_payloads_agg(s: pd.Series) -> bytes:
-        from ..sketch import merge_sketch_payloads
-
-        present = [bytes(x) for x in s if x is not None]
-        return merge_sketch_payloads(present) if present else None
-
-    return merge_payloads_agg
+def as_batch(values: pa.Array) -> pa.RecordBatch:
+    """One Arrow UDF argument as a one-column batch (column "v"), the
+    input the batch helpers and the specs' ``_update`` take."""
+    return pa.RecordBatch.from_arrays([values], ["v"])
 
 
-def arrow_flat_tokens(batch: "pa.RecordBatch", col: str) -> np.ndarray:
+def arrow_flat_tokens(batch: pa.RecordBatch, col: str) -> np.ndarray:
     """Zero-copy flatten of an Arrow list<int> column."""
     return _list_column(batch, col).flatten().to_numpy(zero_copy_only=False)
 
 
-def arrow_row_lengths(batch: "pa.RecordBatch", col: str) -> np.ndarray:
+def arrow_row_lengths(batch: pa.RecordBatch, col: str) -> np.ndarray:
     lens = _list_column(batch, col).value_lengths().to_numpy(zero_copy_only=False)
     return np.nan_to_num(lens, nan=0.0).astype(np.int64)
 
@@ -124,8 +114,6 @@ def _scalar_values(batch, col: str) -> np.ndarray:
     present value into a different probe value — a false negative.
     Nulls are filled at the Arrow level so the integer path stays exact.
     """
-    import pyarrow as pa
-
     arr = batch.column(col)
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -140,7 +128,8 @@ def _scalar_values(batch, col: str) -> np.ndarray:
 
 
 def _series_probe_values(s: pd.Series) -> np.ndarray:
-    """Probe Series -> exact int64 (pandas-side mirror of _scalar_values).
+    """Probe Series -> exact int64 (pandas-side mirror of _scalar_values,
+    for the streaming state functions, which receive pandas).
 
     An int64 probe column WITH NULLs reaches a pandas UDF as float64
     (Arrow->pandas promotion), which silently rounds |v| >= 2^53 — a
@@ -163,28 +152,66 @@ def _series_probe_values(s: pd.Series) -> np.ndarray:
     return vals.astype(np.int64)
 
 
-def broadcast_probe_udf(payload: bytes, spark: SparkSession | None = None):
-    """boolean pandas_udf: probe a scalar int column against a broadcast
-    membership-sketch payload (Bloom / blocked / counting — dispatched
-    by wire magic INSIDE the worker via sketch_from_bytes, never by
-    closing over a sketch class: cloudpickle would serialize the class
-    by value and trip on its module-level struct.Struct objects).
-    Deserializes once per python worker; exact int64 probe values via
-    _series_probe_values (nullable-promotion safe)."""
+_ARROW_TYPES = {
+    "binary": pa.binary(),
+    "bigint": pa.int64(),
+    "double": pa.float64(),
+    "array<bigint>": pa.list_(pa.int64()),
+    "array<double>": pa.list_(pa.float64()),
+}
+
+
+def rowwise_udf(returns: str, fn: Callable):
+    """Scalar Arrow UDF of one or two columns: ``fn(*row)`` per row over
+    exact Python values (ints stay ints, binary is bytes); a row with a
+    NULL argument is NULL. ``returns`` is a DDL key of _ARROW_TYPES."""
+    out_type = _ARROW_TYPES[returns]
+
+    def apply(*cols: pa.Array) -> pa.Array:
+        rows = zip(*(c.to_pylist() for c in cols))
+        return pa.array([None if None in row else fn(*row) for row in rows], type=out_type)
+
+    if fn.__code__.co_argcount == 1:
+
+        def one(a: pa.Array) -> pa.Array:
+            return apply(a)
+
+        return arrow_udf(one, returns)
+
+    def two(a: pa.Array, b: pa.Array) -> pa.Array:
+        return apply(a, b)
+
+    return arrow_udf(two, returns)
+
+
+def _broadcast_sketch(payload: bytes, spark: SparkSession | None) -> Callable:
+    """Broadcast a sketch payload -> a getter that deserializes it once
+    per python worker. Dispatch is by wire magic INSIDE the worker
+    (sketch_from_bytes), never by closing over a sketch class:
+    cloudpickle would serialize the class by value and trip on its
+    module-level struct.Struct objects."""
     spark = spark or SparkSession.getActiveSession()
     bc = spark.sparkContext.broadcast(payload)
     cache: dict = {}
 
-    @F.pandas_udf("boolean")
-    def probe(s: pd.Series) -> pd.Series:
-        bf = cache.get("bf")
-        if bf is None:
-            from ..sketch import sketch_from_bytes
+    def sketch():
+        if "sk" not in cache:
+            cache["sk"] = sketch_from_bytes(bc.value)
+        return cache["sk"]
 
-            bf = cache["bf"] = sketch_from_bytes(bc.value)
-        return pd.Series(bf.contains_tokens(_series_probe_values(s)))
+    return sketch
 
-    return probe
+
+def broadcast_probe_udf(payload: bytes, spark: SparkSession | None = None):
+    """boolean Arrow UDF: probe a scalar int column against a broadcast
+    membership-sketch payload (Bloom / blocked / counting). Arrow hands
+    over exact int64 values; a NULL probes as key 0 (_scalar_values)."""
+    sketch = _broadcast_sketch(payload, spark)
+
+    def probe(keys: pa.Array) -> pa.Array:
+        return pa.array(sketch().contains_tokens(_scalar_values(as_batch(keys), "v")))
+
+    return arrow_udf(probe, "boolean")
 
 
 def count_contained_in(
@@ -202,15 +229,10 @@ def count_contained_in(
     (magic dispatch via sketch_from_bytes — previously a verbatim copy
     per sketch class, round-4 review); per-occurrence semantics via
     dedup multiplicity weighting on token-array columns."""
-    spark = spark or SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(payload)
+    sketch = _broadcast_sketch(payload, spark)
 
     def probe(batches):
-        import pyarrow as pa
-
-        from ..sketch import sketch_from_bytes
-
-        bf = sketch_from_bytes(bc.value)
+        bf = sketch()
         hits = 0
         total = 0
         for batch in batches:
@@ -371,8 +393,6 @@ class _ValueSketch(_ColumnSketch):
         qs_list = [float(q) for q in qs]
 
         def stats(batches):
-            import pyarrow as pa
-
             for b in batches:
                 keys, qcol, vals = [], [], []
                 for key, payload in zip(
@@ -439,39 +459,27 @@ class BloomSketch(_MembershipSketch):
 
     def contained_fraction_udf(self, payload: bytes, spark: SparkSession | None = None):
         """For an array<int> column: fraction of the row's tokens present
-        in the filter (1.0 => every token seen; semi-join strength)."""
-        spark = spark or SparkSession.getActiveSession()
-        bc = spark.sparkContext.broadcast(payload)
-        cache: dict[str, BloomFilter] = {}
+        in the filter (1.0 => every token seen; semi-join strength); a
+        NULL or empty row is 0.0."""
+        sketch = _broadcast_sketch(payload, spark)
 
-        @F.pandas_udf("double")
-        def probe(col: pd.Series) -> pd.Series:
-            bf = cache.get("bf")
-            if bf is None:
-                # magic dispatch inside the worker — closing over the
-                # sketch class trips cloudpickle's by-value path on the
-                # module-level struct.Struct objects (CLAUDE.md)
-                from ..sketch import sketch_from_bytes
+        def probe(tokens: pa.Array) -> pa.Array:
+            batch = as_batch(tokens)
+            lengths = arrow_row_lengths(batch, "v")
+            out = np.zeros(len(lengths))
+            flat = arrow_flat_tokens(batch, "v")
+            if flat.size:
+                hits = sketch().contains_tokens(flat).astype(np.float64)
+                # per-row segment sums via prefix-sum differences: exact for
+                # zero-length rows anywhere (clamped reduceat dropped the
+                # last row's trailing hits when empty rows ended the batch)
+                c = np.concatenate(([0.0], np.cumsum(hits)))
+                ends = np.cumsum(lengths)
+                sums = c[ends] - c[ends - lengths]
+                np.divide(sums, lengths, out=out, where=lengths > 0)
+            return pa.array(out)
 
-                bf = cache["bf"] = sketch_from_bytes(bc.value)
-            arrs = col.to_numpy()
-            lengths = np.fromiter(
-                (0 if a is None else len(a) for a in arrs), dtype=np.int64, count=len(arrs)
-            )
-            flat = flatten_tokens(col)
-            if flat.size == 0:
-                return pd.Series(np.zeros(len(arrs)))
-            hits = bf.contains_tokens(flat).astype(np.float64)
-            # per-row segment sums via prefix-sum differences: exact for
-            # zero-length rows anywhere (clamped reduceat dropped the
-            # last row's trailing hits when empty rows ended the batch)
-            c = np.concatenate(([0.0], np.cumsum(hits)))
-            ends = np.cumsum(lengths)
-            sums = c[ends] - c[ends - lengths]
-            out = np.divide(sums, lengths, out=np.zeros(len(arrs)), where=lengths > 0)
-            return pd.Series(out)
-
-        return probe
+        return arrow_udf(probe, "double")
 
     def semi_join_filter(self, probe_df: DataFrame, payload: bytes, col: str) -> DataFrame:
         """Bloom-filtered semi join: keep rows whose `col` might be in the

@@ -25,13 +25,11 @@ windows; no analogous surface exists in /root/reference.
 """
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sketch import HyperLogLog
+from ..sketch import HyperLogLog, merge_sketch_payloads
+from .aggregate import SketchRows, merge_level
 
 __all__ = ["sliding_distinct_exact", "sliding_distinct_hll"]
 
@@ -81,7 +79,7 @@ def sliding_distinct_hll(
     if days < 1:
         raise ValueError(f"days must be >= 1, got {days}")
     from .cache import tie
-    from .sketches import HllSketch, merge_payloads_agg_udf
+    from .sketches import HllSketch, rowwise_udf
 
     keyed = HllSketch(p=p, col=id_col, scalar=True).build_by_key(
         df.where(F.col(day_col).isNotNull()), day_col
@@ -98,30 +96,18 @@ def sliding_distinct_hll(
         (F.col("sday") <= F.col("wday"))
         & (F.col("sday") >= F.date_sub(F.col("wday"), days - 1)),
     )
-    merge_payloads = merge_payloads_agg_udf()
-    merged = pairs.groupBy("wday").agg(merge_payloads("payload").alias("payload"))
-
-    def estimate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            pdf = b.to_pandas()
-            # explicit types: from_pandas infers null type for empty
-            # columns (CLAUDE.md mapInArrow rule)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        [str(d) for d in pdf["wday"]], type=pa.string()
-                    ),
-                    pa.array(
-                        [
-                            round(HyperLogLog.from_bytes(bytes(pl)).estimate(), 2)
-                            for pl in pdf["payload"]
-                        ],
-                        type=pa.float64(),
-                    ),
-                ],
-                names=["day", "distinct_est"],
-            )
-
+    rows = SketchRows(
+        "wday date, payload binary",
+        (("payload", merge_sketch_payloads, None),),
+        sums=(),
+        keys=("wday",),
+    )
+    merged = merge_level(pairs.select("wday", "payload"), rows, by=["wday"])
+    estimate = rowwise_udf("double", lambda b: round(HyperLogLog.from_bytes(b).estimate(), 2))
     return tie(
-        merged.mapInArrow(estimate, schema="day string, distinct_est double"), sk
+        merged.select(
+            F.col("wday").cast("string").alias("day"),
+            estimate("payload").alias("distinct_est"),
+        ),
+        sk,
     )

@@ -309,6 +309,10 @@ class BloomFilter:
         shape = Shape(m=m, k=k)
         body = memoryview(data)[_HEADER.size :]
         if codec == _CODEC_SPARSE:
+            # the encoder writes uint32 indices only for m <= 2^32 - 1; a
+            # forged larger m would allocate m bits in from_indices
+            if m > 0xFFFFFFFF:
+                raise ValueError(f"corrupt sparse BloomFilter payload: m={m} > 2^32-1")
             if len(body) % 4:
                 raise ValueError("corrupt sparse BloomFilter payload length")
             idx = np.frombuffer(body, dtype=np.uint32).astype(np.int64)
@@ -475,6 +479,8 @@ def merge_payloads(payloads: list[bytes]) -> bytes:
         for h in headers
     ):
         m, k = headers[0][5], headers[0][6]
+        if m > 0xFFFFFFFF:  # same forged-header check as from_bytes
+            raise ValueError(f"corrupt sparse BloomFilter payload: m={m} > 2^32-1")
         shape = Shape(m=m, k=k)
         for h in headers[1:]:
             if (h[5], h[6]) != (m, k):

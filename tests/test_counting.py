@@ -222,23 +222,33 @@ def test_sql_cbf_agg_null_keys_small_ids_exact(spark):
     assert cbf.n_items == len(present)
 
 
-def test_sql_cbf_agg_null_plus_unrecoverable_keys_raises(spark):
-    """A NULL alongside |key| >= 2^53 (xxhash64 ids) means the float64
-    round-trip would silently corrupt keys into false negatives — the
-    aggregate must fail loudly instead (round-4 review finding)."""
-    import pytest
+def test_sql_cbf_agg_null_plus_xxhash_keys_exact(spark):
+    """A NULL alongside |key| >= 2^53 (xxhash64 ids) builds exactly:
+    Arrow hands the aggregate and the probe exact int64 keys plus a
+    real NULL (no float64 promotion), so the payload equals a driver
+    build over the non-null keys and every key probes True — through
+    cbf_agg, and through might_contain_udf on the uncoalesced column."""
     from pyspark.sql import functions as F
-    from pyspark.errors.exceptions.base import PySparkException
 
     from rusty_bloomfilter_spark.functions.sql_sketches import register_sketch_sql
+    from rusty_bloomfilter_spark.operators.sketches import CountingBloomSketch
 
     register_sketch_sql(spark, bloom_n=10_000, bloom_p=1e-4, prefix="u_")
     df = spark.range(50).select(
         F.when(F.col("id") == 0, None).otherwise(F.xxhash64("id")).alias("key")
     )
     df.createOrReplaceTempView("cbf_big_keys")
-    with pytest.raises(Exception, match="2\\^53|NULL"):
-        spark.sql("SELECT u_cbf_agg(key) AS c FROM cbf_big_keys").collect()
+    payload = bytes(spark.sql("SELECT u_cbf_agg(key) AS c FROM cbf_big_keys").collect()[0]["c"])
+    keys = np.array([r["key"] for r in df.collect() if r["key"] is not None], dtype=np.int64)
+    assert len(keys) == 49 and np.abs(keys).max() >= 2**53
+    oracle = CountingBloomFilter.empty(Shape.for_np(n=10_000, p=1e-4))
+    oracle.add_tokens(keys)
+    assert payload == oracle.to_bytes()
+    assert CountingBloomFilter.from_bytes(payload).contains_tokens(keys).all()
+
+    sk = CountingBloomSketch.for_np(n=10_000, p=1e-4, col="key")
+    rows = df.withColumn("hit", sk.might_contain_udf(payload, spark)(F.col("key"))).collect()
+    assert all(r["hit"] for r in rows if r["key"] is not None)
 
 
 def test_series_probe_values_nullable_promotion_guard():

@@ -192,6 +192,20 @@ def test_missing_dht_is_valueerror_not_keyerror():
         decode_jpeg(_strip_segments(enc, 0xC4))
 
 
+def test_dc_category_over_16_is_valueerror():
+    """A DHT whose DC table declares a magnitude category > 16 would
+    overrun the decoder's 24-bit bit accumulator (garbage coefficients
+    or an IndexError); it is rejected when the table is built."""
+    enc = bytearray(encode_jpeg(_gradient(16, 16), quality=90))
+    pos = bytes(enc).index(b"\xff\xc4")
+    while enc[pos + 4] >> 4 != 0:  # find the DHT holding a DC table
+        pos = bytes(enc).index(b"\xff\xc4", pos + 2)
+    assert sum(enc[pos + 5 : pos + 21]) > 0
+    enc[pos + 21] = 17  # first DC symbol: category 17
+    with pytest.raises(ValueError, match="DC category > 16"):
+        decode_jpeg(bytes(enc))
+
+
 def test_missing_dqt_is_valueerror_not_keyerror():
     enc = encode_jpeg(_gradient(16, 16), quality=90)
     with pytest.raises(ValueError):

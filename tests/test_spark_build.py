@@ -617,3 +617,133 @@ def test_every_build_merges_on_arrow_with_oracle_bytes(spark, seq_df, sequences_
         assert (bytes(r["payload"]), r["n_items"], r["n_rows"]) == (payload, n, 2 * len(pdf))
     assert len(rows) == 3
     arrow_only()
+
+
+def test_sketch_payload_udfs_on_arrow_with_spec_bytes(spark, seq_df, sequences_pdf, monkeypatch):
+    """Every SQL sketch function and broadcast probe is an Arrow UDF; no
+    rollup, sliding-window or sharded-probe plan goes through pandas;
+    and each SQL *_agg payload is byte-equal to a driver-side build of
+    the same spec over the group's non-NULL values."""
+    import datetime as dt
+
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql.udf import UDFRegistration
+    from pyspark.util import PythonEvalType
+
+    from rusty_bloomfilter_spark.functions.sql_sketches import register_sketch_sql
+    from rusty_bloomfilter_spark.operators.cube import hll_rollup
+    from rusty_bloomfilter_spark.operators.sharded import ShardedBloomSketch
+    from rusty_bloomfilter_spark.operators.sketches import (
+        AmsSketch,
+        CountingBloomSketch,
+        DDQuantiles,
+        MgSketch,
+    )
+    from rusty_bloomfilter_spark.operators.sliding import sliding_distinct_hll
+    from rusty_bloomfilter_spark.operators.spectral import GramSketch
+
+    arrow_types = {
+        PythonEvalType.SQL_SCALAR_ARROW_UDF,
+        PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF,
+        PythonEvalType.SQL_GROUPED_AGG_ARROW_UDF,
+    }
+    registered = {}
+    register = UDFRegistration.register
+
+    def recording_register(self, name, f, *args):
+        registered[name] = f
+        return register(self, name, f, *args)
+
+    monkeypatch.setattr(UDFRegistration, "register", recording_register)
+    register_sketch_sql(spark, hll_p=12, bloom_n=100_000, bloom_p=1e-3, mg_capacity=256,
+                        gram_dim=4, cms_d=4, cms_w=2048, kll_k=64, ams_d=3, ams_w=1024,
+                        prefix="t8_")
+    monkeypatch.undo()
+    assert len(registered) == 22
+    assert {name: f.evalType in arrow_types for name, f in registered.items()} == dict.fromkeys(registered, True)
+    payload, _ = BloomSketch(SHAPE).build_bytes(seq_df)
+    for udf in (BloomSketch(SHAPE).might_contain_udf(payload, spark),
+                BloomSketch(SHAPE).contained_fraction_udf(payload, spark),
+                CountingBloomSketch.for_np(n=1000, p=1e-3, col="k").might_contain_udf(payload, spark)):
+        assert udf.evalType in arrow_types
+
+    # no pandas node in any rollup, sliding-window or sharded-probe plan
+    plans: list[str] = []
+    frame_type = type(seq_df)
+    collect = frame_type.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame_type, "collect", recording_collect)
+    facts = spark.createDataFrame(
+        [(str(i % 3), None if i % 5 == 0 else str(i % 2), i % 97) for i in range(600)],
+        "t string, d string, uid bigint",
+    )
+    hll_rollup(facts, ["t", "d"], "uid", p=10).collect()
+    days = spark.createDataFrame(
+        [(dt.date(2024, 3, 1 + i % 9), i % 31) for i in range(200)], "day date, uid bigint"
+    )
+    sliding_distinct_hll(days, "day", "uid", days=3, p=10).collect()
+    sharded = ShardedBloomSketch(20_000, 1e-3, 4)
+    assert sharded.count_contained(seq_df, sharded.build(seq_df), spark)[0] > 0
+    ids = spark.range(300).select(F.col("id").alias("rid"), F.xxhash64("id").alias("v"))
+    scalar = ShardedBloomSketch(1000, 1e-3, 4, col="v", scalar=True)
+    scalar.flag_contained(ids, scalar.build(ids), id_col="rid").collect()
+    monkeypatch.undo()
+    assert len(plans) == 4
+    for plan in plans:
+        assert "InPandas" not in plan, plan
+
+    # SQL payloads == driver-side builds of the same spec
+    def local_build(spec, values, type=None):
+        acc = spec._empty()
+        spec._update(acc, pa.RecordBatch.from_arrays([pa.array(values, type=type)], ["v"]))
+        return acc.to_bytes()
+
+    rng = np.random.default_rng(19)
+    zipf = [rng.zipf(1.3, size=rng.integers(40, 200)).clip(max=50_000).astype(np.int32) for _ in range(300)]
+    spark.createDataFrame(pd.DataFrame({"tokens": zipf})).repartition(4).createOrReplaceTempView("zipf8")
+    seq_df.createOrReplaceTempView("seq8")
+    token_specs = {
+        "hll_agg": HllSketch(12, col="v"),
+        "bloom_agg": BloomSketch(Shape.for_np(n=100_000, p=1e-3), col="v"),
+        "cms_agg": CmsSketch(4, 2048, col="v"),
+        "ams_agg": AmsSketch(3, 1024, col="v"),
+        "mg_agg": MgSketch(256, col="v"),
+    }
+    for view, tokens in (("seq8", list(sequences_pdf["tokens"])), ("zipf8", zipf)):
+        for name, spec in token_specs.items():
+            got = spark.sql(f"SELECT t8_{name}(tokens) AS p FROM {view}").collect()[0]["p"]
+            assert bytes(got) == local_build(spec, tokens), (view, name)
+    n_tok = sequences_pdf["n_tok"].astype(np.float64).tolist()
+    for name, spec in (("kll_agg", KllQuantiles(64, col="v")), ("dd_agg", DDQuantiles(0.01, col="v"))):
+        got = spark.sql(f"SELECT t8_{name}(CAST(n_tok AS DOUBLE)) AS p FROM seq8").collect()[0]["p"]
+        assert bytes(got) == local_build(spec, n_tok), name
+
+    # a nullable scalar column: xxhash64 keys (|v| >= 2^53) and doubles
+    nullable = spark.range(3000).select(
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.xxhash64("id")).alias("k"),
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") / 8.0).alias("x"),
+    )
+    nullable.createOrReplaceTempView("nullable8")
+    local = nullable.collect()  # python ints: toPandas would promote k to float64
+    keys = [r["k"] for r in local if r["k"] is not None]
+    xs = [r["x"] for r in local if r["x"] is not None]
+    row = spark.sql(
+        "SELECT t8_cbf_agg(k) AS cbf, t8_kll_agg(x) AS kll, t8_dd_agg(x) AS dd FROM nullable8"
+    ).collect()[0]
+    assert bytes(row["cbf"]) == local_build(
+        CountingBloomSketch(Shape.for_np(n=100_000, p=1e-3), col="v"), keys, pa.int64()
+    )
+    assert bytes(row["kll"]) == local_build(KllQuantiles(64, col="v"), xs)
+    assert bytes(row["dd"]) == local_build(DDQuantiles(0.01, col="v"), xs)
+
+    # gram over integer-valued vectors (exact float sums in any order)
+    vecs = [None if i % 6 == 0 else [float((i * j) % 7 - 3) for j in range(4)] for i in range(90)]
+    spark.createDataFrame([(v,) for v in vecs], "e array<double>").createOrReplaceTempView("gram8")
+    got = spark.sql("SELECT t8_gram_agg(e) AS p FROM gram8").collect()[0]["p"]
+    assert bytes(got) == local_build(GramSketch(4, vec_col="v"), [v for v in vecs if v is not None])

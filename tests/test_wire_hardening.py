@@ -45,6 +45,18 @@ def test_bloom_merge_payloads_fast_path_rejects_forged_index():
         merge_payloads([ok, bad])
 
 
+def test_bloom_sparse_forged_huge_m_rejected():
+    # 300 bytes claiming m = 2^50 used to allocate the m-bit word array
+    # (128 TiB, MemoryError); the encoder writes the sparse codec only
+    # for m <= 2^32 - 1, so a larger m is a forged header
+    forged = _sparse_payload(2**50, 7, np.arange(68))
+    assert len(forged) == 300
+    with pytest.raises(ValueError, match="m="):
+        BloomFilter.from_bytes(forged)
+    with pytest.raises(ValueError, match="m="):
+        merge_payloads([forged, forged])
+
+
 def test_bloom_unknown_codec_rejected():
     f = BloomFilter.empty(Shape(m=70, k=3)).add_tokens(
         np.arange(10, dtype=np.int64)
